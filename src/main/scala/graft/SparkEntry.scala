@@ -508,28 +508,9 @@ object SparkEntry {
     "q_neardup_cosine" -> ((s, dir) => {
       import graft.functions.VectorFns._
       val e = Tables.embeddings(s, dir)
-      val banded = bandedSignature(e)
-      val buckets = banded.groupBy("band_idx", "band_val")
-        .agg(collect_list(col("vec_id")).as("vs"))
-        .filter(size(col("vs")) > 1)
-      val cand = buckets.select(explode(col("vs")).as("va"), col("vs"))
-        .select(col("va"), explode(filter(col("vs"), v => v > col("va"))).as("vb"))
-        .distinct()
-        .localCheckpoint() // feeds fan-out + prefilter (r7b)
-      // pair-side fan-out as an explode of the one planned candidate
-      // subtree + SHUFFLE_HASH verify join (the lshVerify r7 rationale:
-      // a self-union re-plans the banding pipeline per branch, and
-      // broadcast planning funnels the verify into one task); candidate
-      // vec semi-filter before the embedding shuffle (guide §3.2)
-      val candIds = cand.select(explode(array(col("va"), col("vb"))).as("vec_id"))
-      val wanted = cand.select(
-        explode(array(col("va"), col("vb"))).as("vec_id"), col("va"), col("vb"))
-      e.join(candIds, Seq("vec_id"), "left_semi")
-        .join(wanted.hint("shuffle_hash"), Seq("vec_id"))
-        .groupBy("va", "vb")
-        .agg(
-          first(when(col("vec_id") === col("va"), col("embedding")), ignoreNulls = true).as("ea"),
-          first(when(col("vec_id") === col("vb"), col("embedding")), ignoreNulls = true).as("eb"))
+      val cand = NearDup.bucketPairs(bandedSignature(e),
+        Seq("band_idx", "band_val"), "vec_id", as = ("va", "vb"))
+      NearDup.resolvePairs(e, cand, "vec_id", col("embedding"), ("ea", "eb"), ("va", "vb"))
         .select(col("va"), col("vb"), round(cosine(col("ea"), col("eb")), 6).as("cos_sim"))
         .filter(col("cos_sim") >= 0.4)
         .orderBy("va", "vb")
@@ -568,16 +549,8 @@ object SparkEntry {
         floor(lit(0.8) * (max(col("doc_id")) + lit(1L))).cast("long").as("__thr"))
       val sigs = lshBandSigs(docs).join(broadcast(thr))
         .withColumn("is_new", col("doc_id") >= col("__thr"))
-      val buckets = sigs.groupBy("source", "band", "bkey")
-        .agg(collect_list(struct(col("doc_id"), col("is_new"))).as("ds"))
-        .filter(size(col("ds")) > 1 && exists(col("ds"), d => d.getField("is_new")))
-      val cand = buckets
-        .select(explode(col("ds")).as("a"), col("ds"))
-        .select(col("a"), explode(filter(col("ds"),
-          d => d.getField("doc_id") > col("a.doc_id"))).as("b"))
-        .filter(col("b.is_new"))
-        .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
-        .distinct()
+      val cand = NearDup.bucketPairs(sigs, Seq("source", "band", "bkey"), "doc_id",
+        newFlag = Some("is_new"))
       lshVerify(docs, cand)
         .join(broadcast(thr))
         .select(col("da"), col("db"), col("jaccard"),
@@ -593,14 +566,10 @@ object SparkEntry {
     // (ops.Components — convergence-checked, so the fixpoint is the exact
     // component minimum regardless of iteration order); every corpus doc
     // gets a keeper (singletons keep themselves).
-    "q_dedup_clusters" -> ((s, dir) => {
-      val pairs = neardupLshPairs(s, dir)
-      val lbl = graft.ops.Components.minLabel(pairs, "da", "db")
-      Tables.documents(s, dir).select(col("doc_id"))
-        .join(lbl.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("keeper"))
-        .orderBy("doc_id")
-    }),
+    "q_dedup_clusters" -> ((s, dir) =>
+      NearDup.clusterOf(Tables.documents(s, dir).select(col("doc_id")),
+          neardupLshPairs(s, dir), as = "keeper")
+        .orderBy("doc_id")),
 
     // ——— dedup completion via STAR CONTRACTION (oracle-pinned) ———
     // Same contract and oracle as q_dedup_clusters, but the components run
@@ -610,14 +579,10 @@ object SparkEntry {
     // only by specs (r5 VERDICT → r6 #2). With both registry entries
     // green, the fallback swap inside minLabel is between two
     // independently oracle-verified algorithms.
-    "q_dedup_clusters_star" -> ((s, dir) => {
-      val pairs = neardupLshPairs(s, dir)
-      val lbl = graft.ops.Components.starContract(pairs, "da", "db")
-      Tables.documents(s, dir).select(col("doc_id"))
-        .join(lbl.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("keeper"))
-        .orderBy("doc_id")
-    }),
+    "q_dedup_clusters_star" -> ((s, dir) =>
+      NearDup.clusterOf(Tables.documents(s, dir).select(col("doc_id")),
+          neardupLshPairs(s, dir), Components.starContract(_, _, _), "keeper")
+        .orderBy("doc_id")),
 
     // ——— quality-aware keeper selection ———
     // Production dedup does not keep the minimum doc_id — it keeps the
@@ -630,13 +595,9 @@ object SparkEntry {
     "q_dedup_keeper_best" -> ((s, dir) => {
       import graft.functions.TextFns
       val pairs = neardupLshPairs(s, dir)
-      val lbl = graft.ops.Components.minLabel(pairs, "da", "db")
       val docs = Tables.documents(s, dir)
         .select(col("doc_id"), round(TextFns.qualityScore(col("text")), 6).as("q"))
-      val clustered = docs
-        .join(lbl.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
-        .select(col("doc_id"), col("q"),
-          coalesce(col("label"), col("doc_id")).as("cluster"))
+      val clustered = NearDup.clusterOf(docs, pairs)
       val keepers = clustered.groupBy(col("cluster"))
         .agg(max_by(col("doc_id"),
             struct(col("q"), (-col("doc_id")).as("nd"))).as("keeper"),
@@ -657,12 +618,9 @@ object SparkEntry {
     // row-for-row.
     "q_split_leakage_safe" -> ((s, dir) => {
       import graft.functions.TextFns.md5Long
-      val pairs = neardupLshPairs(s, dir)
-      val lbl = graft.ops.Components.minLabel(pairs, "da", "db")
       val h = md5Long(concat_ws("#", lit("split"), col("keeper"))) % 100
-      Tables.documents(s, dir).select(col("doc_id"))
-        .join(lbl.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("keeper"))
+      NearDup.clusterOf(Tables.documents(s, dir).select(col("doc_id")),
+          neardupLshPairs(s, dir), as = "keeper")
         .select(col("doc_id"), col("keeper"),
           when(h < 80, "train").when(h < 90, "val").otherwise("test").as("split"))
         .orderBy("doc_id")
@@ -703,11 +661,8 @@ object SparkEntry {
     // pipeline. Weight is one correctly-rounded division of exact
     // integers (no intermediate float).
     "q_soft_dedup" -> ((s, dir) => {
-      val pairs = neardupLshPairs(s, dir)
-      val lbl = graft.ops.Components.minLabel(pairs, "da", "db")
-      val clustered = Tables.documents(s, dir).select(col("doc_id"))
-        .join(lbl.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("cluster"))
+      val clustered = NearDup.clusterOf(Tables.documents(s, dir).select(col("doc_id")),
+        neardupLshPairs(s, dir))
       val sizes = clustered.groupBy("cluster")
         .agg(count(lit(1)).as("cluster_size"))
       clustered.join(sizes, Seq("cluster"))
@@ -731,9 +686,9 @@ object SparkEntry {
     // shingle produces zero candidates — skew-immune by construction, no
     // salting needed: df is a map-side-combinable count and only RARE
     // postings ever bucket-group, so collect_list is bounded ≤ 10),
-    // verify is the lshVerify shape (one trigram-set scan resolves both
-    // pair sides, row-local array intersect), and the threshold test is
-    // exact integer arithmetic (10·i ≥ 9·n — no float boundary); the
+    // verify resolves both pair sides in one trigram-set scan
+    // (NearDup.resolvePairs, row-local array intersect), and the
+    // threshold test is exact integer arithmetic (10·i ≥ 9·n — no float boundary); the
     // rounded score is reporting only. Emits BOTH directions when both
     // clear 0.9 (exact dups ⇒ two rows at 1.0).
     "q_containment" -> ((s, dir) =>
@@ -1594,20 +1549,10 @@ object SparkEntry {
       val sh = graft.functions.TextFns.simhash(docs,
         "doc_id", "text", carryCols = Seq("source"))
       val banded = graft.functions.TextFns.hashBands(sh, "simhash", 60, 7)
-      // bucket grouping instead of a self-join — one pipeline, one extra
-      // groupBy (see q_neardup_lsh note)
-      val buckets = banded.groupBy("source", "band_idx", "band_val")
-        .agg(collect_list(struct(col("doc_id"), col("simhash"))).as("ds"))
-        .filter(size(col("ds")) > 1)
-      val cand = buckets
-        .select(explode(col("ds")).as("a"), col("ds"))
-        .select(col("a"), explode(
-          filter(col("ds"), x => x.getField("doc_id") > col("a").getField("doc_id"))).as("b"))
-        .select(col("a").getField("doc_id").as("da"), col("a").getField("simhash").as("ha"),
-          col("b").getField("doc_id").as("db"), col("b").getField("simhash").as("hb"))
-        .distinct()
-      cand
-        .withColumn("hamming", bit_count(col("ha").bitwiseXOR(col("hb"))).cast("long"))
+      NearDup.bucketPairs(banded, Seq("source", "band_idx", "band_val"), "doc_id",
+          payload = Seq("simhash"))
+        .withColumn("hamming",
+          bit_count(col("simhash_a").bitwiseXOR(col("simhash_b"))).cast("long"))
         .filter(col("hamming") <= 6)
         .select("da", "db", "hamming")
         .orderBy("da", "db")
@@ -2444,8 +2389,8 @@ object SparkEntry {
     // per-doc signature vector is aggregated once and BOTH derived forms —
     // band keys (4-value CSV md5, bkey-identical to lshBandSigs by
     // construction, spec-pinned) and the est seed-match — slice it;
-    // candidates come from bucket grouping, exact sides resolve in one
-    // documents scan (the lshVerify shape, sans threshold).
+    // candidates come from NearDup.bucketPairs, exact sides resolve in one
+    // documents scan (NearDup.resolvePairs, Jaccard without the threshold).
     "q_minhash_error" -> ((s, dir) => {
       import graft.functions.TextFns._
       val docs = Tables.documents(s, dir)
@@ -2470,29 +2415,8 @@ object SparkEntry {
         posexplode(array((0 until 2).map(b =>
           md5Long(array_join(transform(slice(col("sig"), b * 4 + 1, 4),
             v => v.cast("string")), ","))): _*)).as(Seq("band", "bkey")))
-      val buckets = banded.groupBy("source", "band", "bkey")
-        .agg(collect_list(col("doc_id")).as("ds"))
-        .filter(size(col("ds")) > 1)
-      // candidate list materialized once; candidate-doc semi-filter before
-      // the token-set build (the lshVerify r7b shape, guide §3.2)
-      val cand = buckets.select(explode(col("ds")).as("da"), col("ds"))
-        .select(col("da"), explode(filter(col("ds"), d => d > col("da"))).as("db"))
-        .distinct()
-        .localCheckpoint()
-      val candIds = cand.select(explode(array(col("da"), col("db"))).as("doc_id"))
-      val sets = docs.select(col("doc_id"), col("text"))
-        .join(candIds, Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), array_distinct(split(col("text"), " ")).as("s"))
-      // pair-side fan-out as an explode of the one planned candidate
-      // subtree, not a self-union (the lshVerify r7 fix)
-      val wanted = cand.select(
-        explode(array(col("da"), col("db"))).as("doc_id"), col("da"), col("db"))
-      // SHUFFLE_HASH for the verify join (the lshVerify r7 rationale)
-      val exact = sets.join(wanted.hint("shuffle_hash"), Seq("doc_id"))
-        .groupBy("da", "db")
-        .agg(
-          first(when(col("doc_id") === col("da"), col("s")), ignoreNulls = true).as("sa"),
-          first(when(col("doc_id") === col("db"), col("s")), ignoreNulls = true).as("sb"))
+      val cand = NearDup.bucketPairs(banded, Seq("source", "band", "bkey"), "doc_id")
+      val exact = NearDup.resolvePairs(docs, cand, "doc_id", tokenSet, ("sa", "sb"))
         .withColumn("i", size(array_intersect(col("sa"), col("sb"))))
         .select(col("da"), col("db"), (col("i").cast("double") /
           (size(col("sa")) + size(col("sb")) - col("i"))).as("j"))
@@ -2559,24 +2483,6 @@ object SparkEntry {
       .orderBy("doc_id")
   }
 
-  /** Verified MinHash-LSH near-dup pairs (da < db, jaccard ≥ 0.9) — ONE
-    * definition for `q_neardup_lsh` and the `q_dedup_clusters` keeper
-    * assignment (its oracle twin is [[neardupPairsCtes]]).
-    *
-    *  - doc→source attach and candidate-pair verify carry NO broadcast
-    *    hints: both sides are |docs|- or candidate-sized, Catalyst/AQE
-    *    picks broadcast at fixture size, shuffle join at corpus scale;
-    *  - the band key is the 60-bit md5Long of the 4-minhash CSV, not the
-    *    ~40-char string (8-byte shuffle key, same buckets — collision
-    *    odds ~|keys|²/2^61);
-    *  - candidate pairs come from BUCKET GROUPING, not a band self-join:
-    *    the self-join's two aliases each recompute the whole minhash
-    *    pipeline (exchange reuse does not fire across aliases — measured
-    *    2×), while one more groupBy extends the existing shuffle;
-    *  - exact verify resolves BOTH pair sides in one documents scan
-    *    (pair list exploded to (doc_id, pair) and regrouped), never
-    *    re-tokenizing the corpus per side.
-    */
   /** Rare-shingle-blocked asymmetric containment (q_containment's body,
     * factored so the spec can drive it with a hand-built fixture). Input
     * needs (doc_id, text); emits (inner_doc, outer_doc, containment) for
@@ -2595,12 +2501,11 @@ object SparkEntry {
     // r7b: the checkpoint holds ONE row per doc (the per-doc distinct
     // trigram hash ARRAY) instead of one row per (doc, gram) — same
     // bytes, ~10³× fewer rows through the block manager, and the verify
-    // `sets` frame below becomes a plain projection of the checkpoint
-    // (the old per-gram form needed a corpus-wide collect_list exchange
-    // to rebuild exactly this array). The md5-per-gram work is unchanged
-    // (one hash per distinct gram, row-local); postings for the df gate
-    // and the rare buckets are explodes OF the checkpoint, sharing its
-    // one gh exchange.
+    // side reads the checkpoint as is (the old per-gram form needed a
+    // corpus-wide collect_list exchange to rebuild exactly this array).
+    // The md5-per-gram work is unchanged (one hash per distinct gram,
+    // row-local); postings for the df gate and the rare buckets are
+    // explodes OF the checkpoint, sharing its one gh exchange.
     val g = spreadSmallScan(docs)
       .select(col("doc_id"), split(col("text"), " ").as("a"))
       .select(col("doc_id"),
@@ -2611,58 +2516,21 @@ object SparkEntry {
     // map-side-combinable count (a boilerplate shingle partially
     // aggregates — never one task's buffer), filtered to rare BEFORE any
     // list exists; (2) only RARE postings (df ≤ 10) bucket-group into doc
-    // lists, so collect_list is bounded ≤ 10 by construction — the
-    // neardupLshPairs bucket→pair-explode shape without its self-join's
-    // two-sided postings recompute. Both stages exchange g on gh, so the
-    // scan feeds one reusable shuffle.
+    // lists, so collect_list is bounded ≤ 10 by construction. Both stages
+    // exchange g on gh, so the scan feeds one reusable shuffle.
     val rare = posting.groupBy("gh").agg(count(lit(1)).as("df"))
       .filter(col("df").between(2, 10)).select("gh")
-    // Candidate pairs materialized once (r7b): the frame feeds the
-    // pair-side fan-out AND the candidate-doc prefilter below, and it is
-    // pairs-sized (bounded by C(10,2) per rare shingle).
-    val cand = posting.join(rare, Seq("gh"))
-      .groupBy("gh").agg(collect_list(col("doc_id")).as("ds"))
-      .select(explode(col("ds")).as("da"), col("ds"))
-      .select(col("da"), explode(filter(col("ds"), d => d > col("da"))).as("db"))
-      .distinct()
-      .localCheckpoint()
-    // Verify in the lshVerify shape: pairs exploded to (doc_id, pair),
-    // ONE trigram-set scan resolves both sides, intersection row-local
-    // over the per-doc bounded hash arrays (sizes double as |A|/|B| —
-    // no separate per-doc count aggregate). Measured 3× faster than
-    // re-joining per-gram postings and regrouping on (da, db, gh): the
-    // array form ships each side once per pair instead of one shuffled
-    // row per gram per pair.
-    // The checkpoint row already holds the per-doc distinct trigram
-    // hashes (trigramArr applies array_distinct before hashing), and the
-    // oracle's `sz` counts exactly these elements, so size(s) keeps
-    // matching it; array_intersect is order-insensitive, so element
-    // order cannot change any output.
-    // Guide §3.2 (r7b): only docs that appear in some candidate pair need
-    // their hash set — and the checkpoint row IS the set, so the verify
-    // side is a semi-filtered projection (no regroup exchange at all; AQE
-    // broadcasts the candidate id list while small).
-    val candIds = cand.select(explode(array(col("da"), col("db"))).as("doc_id"))
-    val sets = g.join(candIds, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), col("hs").as("s"))
-    // pair-side fan-out as an explode (see comment below) and SHUFFLE_HASH
-    // for the verify join (the lshVerify r7 rationale: broadcast planning
-    // funneled the set projection + join + partial aggregate into one
-    // single-partition stage)
-    // Both fan-outs below are EXPLODES, not self-unions: a union re-plans
-    // its input subtree per branch (cand holds 4 explode stages — a
-    // 2-branch union of it and a 2-branch union of j multiply to 16
-    // planned copies of the postings pipeline, the >2×-reference blowup
-    // Components' starLoop documents), an explode fans out rows of the
-    // ONE planned subtree.
-    val wanted = cand
-      .select(explode(array(col("da"), col("db"))).as("doc_id"),
-        col("da"), col("db"))
-    val j = sets.join(wanted.hint("shuffle_hash"), Seq("doc_id"))
-      .groupBy("da", "db")
-      .agg(
-        first(when(col("doc_id") === col("da"), col("s")), ignoreNulls = true).as("sa"),
-        first(when(col("doc_id") === col("db"), col("s")), ignoreNulls = true).as("sb"))
+    val cand = NearDup.bucketPairs(posting.join(rare, Seq("gh")), Seq("gh"), "doc_id")
+    // Verify: the checkpoint row already holds the per-doc distinct
+    // trigram hashes (trigramArr applies array_distinct before hashing),
+    // so it IS the side's set — its size doubles as |A|/|B| (the oracle's
+    // `sz` counts exactly these elements) and the intersection is
+    // row-local over bounded arrays. Measured 3× faster than re-joining
+    // per-gram postings and regrouping on (da, db, gh): the array form
+    // ships each side once per pair instead of one shuffled row per gram
+    // per pair. array_intersect is order-insensitive, so element order
+    // cannot change any output.
+    val j = NearDup.resolvePairs(g, cand, "doc_id", col("hs"), ("sa", "sb"))
       .select(col("da"), col("db"),
         size(array_intersect(col("sa"), col("sb"))).cast("long").as("i"),
         size(col("sa")).cast("long").as("na"),
@@ -2825,7 +2693,15 @@ object SparkEntry {
       .orderBy("doc_id")
   }
 
-  /** @param carrySource ride the bucket's `source` onto each emitted pair
+  /** Verified MinHash-LSH near-dup pairs (da < db, jaccard ≥ 0.9) — ONE
+    * definition for `q_neardup_lsh` and the dedup-completion queries (its
+    * oracle twin is [[neardupPairsCtes]]): [[lshBandSigs]] banding,
+    * [[graft.ops.NearDup.bucketPairs]] candidates, [[lshVerify]]. The
+    * band key is the 60-bit md5Long of the 4-minhash CSV, not the ~40-char
+    * string (8-byte shuffle key, same buckets — collision odds
+    * ~|keys|²/2^61).
+    *
+    * @param carrySource ride the bucket's `source` onto each emitted pair
     *        (pairs are within-source BY CONSTRUCTION — the band bucket key
     *        includes `source` — so the column is functionally dependent on
     *        `da` and adding it to the pre-verify distinct cannot change the
@@ -2834,16 +2710,10 @@ object SparkEntry {
   private[graft] def neardupLshPairs(s: SparkSession, dir: String,
                                      carrySource: Boolean = false): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val buckets = lshBandSigs(docs).groupBy("source", "band", "bkey")
-      .agg(collect_list(col("doc_id")).as("ds"))
-      .filter(size(col("ds")) > 1)
-    val cand0 = buckets
-      .select(col("source"), explode(col("ds")).as("da"), col("ds"))
-      .select(col("source"), col("da"),
-        explode(filter(col("ds"), d => d > col("da"))).as("db"))
-    val cand = (if (carrySource) cand0.select(col("da"), col("db"), col("source"))
-                else cand0.select(col("da"), col("db"))).distinct()
-    lshVerify(docs, cand, if (carrySource) Seq("source") else Nil)
+    val carry = if (carrySource) Seq("source") else Nil
+    val cand = NearDup.bucketPairs(lshBandSigs(docs), Seq("source", "band", "bkey"),
+      "doc_id", carry = carry)
+    lshVerify(docs, cand, carry)
   }
 
   /** Per-(doc, band) LSH signature rows `(doc_id, band, bkey, source)` —
@@ -2877,54 +2747,22 @@ object SparkEntry {
   }
 
   /** Exact-Jaccard verify of candidate pairs (da < db) → pairs with
-    * jaccard ≥ 0.9. Resolves BOTH pair sides in one documents scan (pair
-    * list exploded to (doc_id, pair) and regrouped), never re-tokenizing
-    * the corpus per side. The pair-side fan-out is an EXPLODE of the one
-    * planned candidate subtree, not a self-union: a 2-branch union
-    * re-plans (and re-executes) the entire candidate pipeline per branch
-    * — exchange reuse does not fire across the union's aliases (the
-    * containmentPairs lesson, r7: 5 parquet scans → 3 in q_neardup_lsh's
-    * plan, one full minhash+banding+bucket pass saved per query).
+    * jaccard ≥ 0.9; both sides' token sets come from one documents scan
+    * ([[graft.ops.NearDup.resolvePairs]]).
     */
   private[graft] def lshVerify(docs: DataFrame, cand: DataFrame,
-                               carryCols: Seq[String] = Nil): DataFrame = {
-    // Candidate list materialized once (r7b): it feeds BOTH the pair-side
-    // fan-out and the candidate-doc prefilter below; a second lazy
-    // reference would re-plan (and re-execute) the whole banding/bucket
-    // pipeline. The frame is pairs-sized (≪ corpus by the LSH contract).
-    val candC = cand.localCheckpoint()
-    val ids = candC.select(explode(array(col("da"), col("db"))).as("doc_id"))
-    // Guide §3.2: drop non-candidate docs BEFORE their token arrays are
-    // built and shuffled — the semi-join pushes below the split()
-    // projection (PushDownLeftSemiAntiJoin), so only docs that appear in
-    // some candidate pair are ever tokenized into `s` or exchanged. AQE
-    // broadcasts the id list while it is small; at scale it plans as a
-    // shuffled semi whose doc_id exchange the verify join below reuses.
-    val sets = docs.select(col("doc_id"), col("text"))
-      .join(ids, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), array_distinct(split(col("text"), " ")).as("s"))
-    val wanted = candC.select(
-      explode(array(col("da"), col("db"))).as("doc_id") +:
-        (Seq("da", "db") ++ carryCols).map(col): _*)
-    // SHUFFLE_HASH with the pair list as build side (r7): letting the
-    // planner broadcast here put the token-set projection + join + partial
-    // sort-aggregate into one single-partition stage (measured 4.6s vs
-    // 0.8s at sf0.1); a shuffled-hash join keys both sides by doc_id —
-    // the corpus side streams in parallel, the build side is the
-    // candidate slice of one partition (bounded, AQE-skew-splittable),
-    // and neither the corpus nor an at-scale-unbounded candidate list is
-    // ever collected to one place.
-    sets.join(wanted.hint("shuffle_hash"), Seq("doc_id"))
-      .groupBy(("da" +: "db" +: carryCols).map(col): _*)
-      .agg(
-        first(when(col("doc_id") === col("da"), col("s")), ignoreNulls = true).as("sa"),
-        first(when(col("doc_id") === col("db"), col("s")), ignoreNulls = true).as("sb"))
+                               carryCols: Seq[String] = Nil): DataFrame =
+    NearDup.resolvePairs(docs, cand, "doc_id", tokenSet, ("sa", "sb"), carry = carryCols)
       .withColumn("i", size(array_intersect(col("sa"), col("sb"))))
       .withColumn("jaccard", col("i").cast("double") / (size(col("sa")) + size(col("sb")) - col("i")))
       .filter(col("jaccard") >= 0.9)
       .select((Seq(col("da"), col("db"), round(col("jaccard"), 6).as("jaccard")) ++
         carryCols.map(col)): _*)
-  }
+
+  /** A document's distinct whitespace tokens — the Jaccard verify side of
+    * [[lshVerify]] and q_minhash_error.
+    */
+  private def tokenSet: Column = array_distinct(split(col("text"), " "))
 
   /** Oracle twin of [[neardupLshPairs]]: the CTE chain up to `ver`
     * (candidate pairs + exact-Jaccard verify), shared by the q_neardup_lsh

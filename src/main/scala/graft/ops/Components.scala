@@ -108,7 +108,6 @@ object Components {
         .select(col("src").as("node"), col("label"))
         .unionByName(l)
         .groupBy(col("node")).agg(min(col("label")).as("label"))
-    val debug = sys.env.get("GRAFT_COMPONENTS_DEBUG").contains("1")
     // Convergence (r7): labels are positive, start at node ids, and only
     // ever DECREASE, so the label sum is strictly monotone until the
     // fixpoint — "sum unchanged across a fused pair" ⇔ both steps were
@@ -124,15 +123,10 @@ object Components {
     var converged = false
     while (!converged && iter < maxIters) {
       iter += 2
-      val t0 = if (debug) System.nanoTime() else 0L
       val next = step(step(lbl)).localCheckpoint()
-      val t1 = if (debug) System.nanoTime() else 0L
       val s = labelSum(next)
       converged = s.compareTo(prevSum) == 0
       prevSum = s
-      if (debug) System.err.println(
-        f"[components] fused round ending at $iter: checkpoint ${(t1 - t0) / 1e9}%.2fs " +
-          f"converge-read ${(System.nanoTime() - t1) / 1e9}%.2fs converged=$converged")
       lbl = next
     }
     if (!converged) {
@@ -220,7 +214,6 @@ object Components {
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
 
-    val debug = sys.env.get("GRAFT_COMPONENTS_DEBUG").contains("1")
     var sig = signature(e)
     var round = 0
     var done = sig._1 == 0L // no edges → all singletons
@@ -233,17 +226,12 @@ object Components {
       // 21.5s vs 11.8s on the fixture graph) applies one level down
       // (measured again r7: 4.9s vs 3.0s of components time at sf0.1).
       round += 1
-      val t0 = if (debug) System.nanoTime() else 0L
       val ls = largeStar(e).localCheckpoint()
       val next = smallStar(ls).localCheckpoint()
-      val t1 = if (debug) System.nanoTime() else 0L
       val s2 = signature(next)
       done = s2 == sig
       sig = s2
       e = next
-      if (debug) System.err.println(
-        f"[components] star round $round: materialize ${(t1 - t0) / 1e9}%.2fs " +
-          f"signature ${(System.nanoTime() - t1) / 1e9}%.2fs done=$done")
     }
     require(done, s"star contraction did not converge in $maxRounds rounds — " +
       "not a graph-shape issue (contraction is O(log n) on any shape); " +

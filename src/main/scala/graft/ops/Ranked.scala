@@ -14,11 +14,15 @@ import org.apache.spark.sql.functions._
   *
   * Two-level scheme (classic distributed rank):
   *   1. per-source approximate quantile split points over `q`
-  *      (`percentile_approx` — deterministic given the data; accuracy only
-  *      affects bucket BALANCE, never correctness);
+  *      (`percentile_approx`, whose sketch merge may depend on how the
+  *      input is partitioned; accuracy only affects bucket BALANCE, never
+  *      correctness), materialized once so every consumer reads the same
+  *      split points;
   *   2. each row's bucket = #splits strictly below (asc) / above (desc)
   *      its q — a pure function of q, so ties always share a bucket and
-  *      bucketing is monotone w.r.t. the (q, id) sort order;
+  *      bucketing is monotone w.r.t. the (q, id) sort order. A NULL q
+  *      takes the terminal bucket where the plain window orders NULLs:
+  *      the first bucket ascending, the last descending;
   *   3. per-(source, bucket) counts (+ payload sums) roll into per-bucket
   *      offsets via a window over the TINY sources×buckets frame;
   *   4. row_number / running sum inside (source, bucket) + the bucket's
@@ -39,26 +43,22 @@ import org.apache.spark.sql.functions._
   *
   * The input is referenced twice (split points + ranked side) and counted
   * once for the size branch: pass a MATERIALIZED frame (localCheckpoint).
-  * Below `spark.graft.rank.singleSortMaxRows` (default 4M) the plain
-  * single-window plan is chosen instead — the q_sample_topk_prefilter
-  * declarative-fallback pattern: at that size the one-task sort is
-  * strictly cheaper than split points + offset joins, while any corpus
-  * that could overflow a task picks the bucketed plan from its own count.
+  * At or below [[SingleSortMaxRows]] the plain single-window plan is
+  * chosen instead — the q_sample_topk_prefilter declarative-fallback
+  * pattern: at that size the one-task sort is strictly cheaper than split
+  * points + offset joins, while any corpus that could overflow a task
+  * picks the bucketed plan from its own count.
   */
 object Ranked {
   /** Rows above which the single-window form is no longer acceptable and
-    * the bucketed two-level plan is chosen instead — the declarative
-    * size-based branch of `q_sample_topk_prefilter`, made from the
+    * the bucketed two-level plan is chosen instead, decided from the
     * materialized input's exact count (a metadata-cheap action over the
-    * checkpoint). Parameterised (`spark.graft.rank.singleSortMaxRows`):
-    * the default keeps fixture-sized sources on the plain plan (whose
+    * checkpoint): fixture-sized sources stay on the plain plan (whose
     * one-task sort is FASTER below millions of rows — no split-point
     * pass, no offset joins) while any production corpus crosses into the
     * bucketed plan long before a source overflows one task.
     */
-  private def singleSortMaxRows(d: DataFrame): Long =
-    d.sparkSession.conf.getOption("spark.graft.rank.singleSortMaxRows")
-      .map(_.toLong).getOrElse(4000000L)
+  private val SingleSortMaxRows = 4000000L
 
   def perSource(d: DataFrame, source: String, q: String, id: String,
                 descQ: Boolean = false,
@@ -66,7 +66,7 @@ object Ranked {
                 buckets: Int = 0): DataFrame = {
     val ord0 = if (descQ) Seq(col(q).desc, col(id).asc)
                else Seq(col(q).asc, col(id).asc)
-    if (buckets == 0 && d.count() <= singleSortMaxRows(d)) {
+    if (buckets == 0 && d.count() <= SingleSortMaxRows) {
       // small-input branch: the plain per-source window IS the best plan
       // here; the bucketed branch below is the shape that must hold at
       // scale (RankedSpec pins their row-for-row equality and the
@@ -81,14 +81,21 @@ object Ranked {
     val b = if (buckets > 0) buckets
       else math.max(8, d.sparkSession.sparkContext.defaultParallelism * 4)
     val fracs = array((1 until b).map(i => lit(i.toDouble / b)): _*)
+    // sources-sized; materialized so the offsets side and the ranked side
+    // read ONE set of split points — two lazy references would each run
+    // the approximate aggregate, and nothing forces them to agree
     val bounds = d.groupBy(col(source))
       .agg(percentile_approx(col(q), fracs, lit(10000)).as("__splits"))
+      .localCheckpoint()
     // #splits strictly on the came-before side of q: monotone in the sort
     // order and identical for tied q values, so global (q, id) order ≡
-    // (bucket, q, id) order — the equivalence the offsets below rely on
-    val bkt: Column = aggregate(col("__splits"), lit(0L),
-      (acc, s) => acc + when(if (descQ) s > col(q) else s < col(q), 1L)
-        .otherwise(0L))
+    // (bucket, q, id) order — the equivalence the offsets below rely on.
+    // NULL q sorts first ascending and last descending (Spark's default
+    // null ordering), so it takes bucket 0 or the last of the b buckets.
+    val bkt: Column = when(col(q).isNull, lit(if (descQ) b - 1L else 0L))
+      .otherwise(aggregate(col("__splits"), lit(0L),
+        (acc, s) => acc + when(if (descQ) s > col(q) else s < col(q), 1L)
+          .otherwise(0L)))
     val withB = d.join(broadcast(bounds), Seq(source))
       .withColumn("__bkt", bkt).drop("__splits")
     val aggs = count(lit(1)).as("__c") +:

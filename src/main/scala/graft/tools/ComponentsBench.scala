@@ -39,9 +39,8 @@ object ComponentsBench {
       }
       val nNodes = lbl.count()
       val (_, tJoin) = sec {
-        graft.Tables.documents(spark, sfDir).select(col("doc_id"))
-          .join(lbl.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
-          .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("keeper"))
+        graft.ops.NearDup.clusterOf(graft.Tables.documents(spark, sfDir).select(col("doc_id")),
+            pairs, (_, _, _) => lbl, "keeper")
           .write.mode("overwrite").format("noop").save()
       }
       val (lblStar, tStar) = sec {

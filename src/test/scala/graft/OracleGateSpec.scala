@@ -1,0 +1,41 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import scala.sys.process.{Process, ProcessLogger}
+import com.fasterxml.jackson.databind.ObjectMapper
+
+/** The near-dup family against its DuckDB oracles, inside the unit suite:
+  * each query's output is dumped the way `graft.Verify` dumps it (one
+  * parquet directory per key plus `oracle_sql.json`) and `tools/check.py`
+  * compares it with the oracle SQL. Cancelled when python3 cannot import
+  * duckdb.
+  */
+class OracleGateSpec extends SparkSpec {
+  private val sfDir = "/root/testdata/sf0.001"
+  private val keys = Seq(
+    "q_neardup_lsh", "q_neardup_cosine", "q_simhash_neardup",
+    "q_incremental_neardup", "q_minhash_error", "q_dedup_clusters",
+    "q_dedup_clusters_star", "q_dedup_keeper_best", "q_split_leakage_safe",
+    "q_soft_dedup", "q_dup_matrix", "q_containment", "q_contain_prune")
+
+  private def deleteTree(p: Path): Unit =
+    Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+
+  test("near-dup family matches its DuckDB oracles (tools/check.py ALL PASS)") {
+    assume(Process(Seq("python3", "-c", "import duckdb")).!(ProcessLogger(_ => ())) == 0,
+      "python3 cannot import duckdb")
+    val out = Files.createTempDirectory("oracle-gate")
+    try {
+      for (k <- keys)
+        SparkEntry.queries(k)(spark, sfDir).coalesce(1).write.parquet(s"$out/$k")
+      Files.writeString(out.resolve("oracle_sql.json"), new ObjectMapper()
+        .writeValueAsString(keys.map(k => k -> SparkEntry.oracleSql(k)).toMap.asJava))
+      val log = new StringBuilder
+      val append = (l: String) => { log.append(l).append('\n'); () }
+      val rc = Process(Seq("python3", Paths.get("tools", "check.py").toString,
+        sfDir, out.toString)).!(ProcessLogger(append, append))
+      assert(rc == 0 && log.toString.linesIterator.contains("ALL PASS"), log.toString)
+    } finally deleteTree(out)
+  }
+}

@@ -237,7 +237,7 @@ class PlanShapeSpec extends SparkSpec {
       s"sweep reads the one materialized (doc,source,tok,q) frame:\n$p")
     assert(count(p, "CartesianProduct|SortMergeJoin") == 0)
     // at fixture size Ranked.perSource's declarative branch picks the
-    // plain window (strictly cheaper below singleSortMaxRows); the
+    // plain window (strictly cheaper below SingleSortMaxRows); the
     // at-scale composite-key (source, __bkt) window shape is pinned by
     // RankedSpec with buckets forced on
     assert(count(p, "Window") >= 1)

@@ -9,7 +9,8 @@ import graft.ops.Ranked
   * single-window form it replaces in q_quality_calibrate / q_quality_sweep
   * / q_mix_select — row-for-row equality of rank, per-source count and
   * running sum, on a frame with a DOMINANT source (the skew shape the
-  * bucketed form exists for), heavy q ties (bucket-boundary safety), a
+  * bucketed form exists for), heavy q ties (bucket-boundary safety), NULL
+  * q values (which sort first ascending and last descending), a
   * single-row source (n−1 = 0 edge), both sort directions, and a bucket
   * count forced high so every source really splits across many buckets.
   * Plus the plan pin: the ranking window must partition on
@@ -20,12 +21,15 @@ class RankedSpec extends SparkSpec {
 
   private def fixture: DataFrame = {
     val rows =
-      // dominant source: 90% of all rows, many duplicated q values
-      (0L until 900L).map(i => ("big", i, (i % 37).toDouble / 10.0, i % 13 + 1)) ++
-      // normal source
-      (0L until 90L).map(i => ("mid", 1000L + i, (i % 11).toDouble, i % 7 + 1)) ++
+      // dominant source: 90% of all rows, many duplicated q values, and
+      // NULL q on every 97th row
+      (0L until 900L).map(i => ("big", i,
+        if (i % 97 == 3) None else Some((i % 37).toDouble / 10.0), i % 13 + 1)) ++
+      // normal source, one NULL q
+      (0L until 90L).map(i => ("mid", 1000L + i,
+        if (i == 40) None else Some((i % 11).toDouble), i % 7 + 1)) ++
       // single-row source
-      Seq(("one", 5000L, 3.14, 5L))
+      Seq(("one", 5000L, Some(3.14), 5L))
     rows.toDF("source", "doc_id", "q", "tok")
   }
 
@@ -54,7 +58,7 @@ class RankedSpec extends SparkSpec {
         descQ = desc, cumOf = Some("tok"), buckets = 16)
       assert(canon(two) == canon(plain), s"desc=$desc: bucketed ≠ windowed")
       // the declarative size branch (buckets = 0, fixture below
-      // singleSortMaxRows → plain plan) must emit the same rows too
+      // SingleSortMaxRows → plain plan) must emit the same rows too
       val auto = Ranked.perSource(d.localCheckpoint(), "source", "q",
         "doc_id", descQ = desc, cumOf = Some("tok"))
       assert(canon(auto) == canon(plain), s"desc=$desc: auto branch ≠ windowed")
