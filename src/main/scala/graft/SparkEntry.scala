@@ -2129,11 +2129,12 @@ object SparkEntry {
         .orderBy("conv_id", "w_start_us")),
 
     // ——— FLAGSHIP: the full per-conversation wide feature matrix ———
-    // All modules fused: one enrich chain (lag + sessionize + native as-of
-    // merge) over the ordered turns, every per-frame statistic folded into
-    // window columns + conditional aggs, so the whole matrix is one parquet
-    // scan, one full-table exchange, and ONE shared HashAggregate pair
-    // (shape pinned by PlanShapeSpec).
+    // All modules fused: one enrich chain (native as-of merge, then lag +
+    // session + run windows over one sort) over the ordered turns, session
+    // and run statistics folded into window columns + conditional aggs and
+    // the trimmed mean into the aggregate, so the whole matrix is one
+    // parquet scan, one full-table exchange, and ONE shared HashAggregate
+    // pair (shape pinned by PlanShapeSpec).
     "q_feature_matrix" -> ((s, dir) =>
       graft.features.FeatureRegistry.featureMatrix(
           turnsOrdered(s, dir), Some(Tables.state(s, dir)))

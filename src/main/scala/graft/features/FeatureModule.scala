@@ -10,16 +10,18 @@ import org.apache.spark.sql.functions._
   * musiF mutates a per-score blackboard dict in dependency order; here each
   * module contributes declaratively to ONE logical plan:
   *
-  *  - `enrich` adds per-turn columns (lag/session ids/as-of state) — runs in
-  *    dependency order on the shared turns frame, windows fuse when frames
-  *    match;
+  *  - `enrich` adds per-turn columns (lag/session bounds/as-of state) — runs
+  *    in dependency order on the shared turns frame; every module window
+  *    orders by (conv_id, turn_idx), so the stack costs one sort, and
+  *    Catalyst fuses adjacent Windows unless a Project computing from the
+  *    lower one's output sits between them;
   *  - `aggs` contributes aggregate expressions to a single shared
   *    `groupBy(conv_id)` pass — Catalyst fuses ALL modules' aggregates into
   *    one HashAggregate (musiF needs one pass per module; we need one total).
-  *    Multi-pass features (trimmed stats, run-length, session extrema) fold
-  *    into the same pass as window columns + conditional aggs — an earlier
-  *    design joined them back as separate per-conversation frames, but the
-  *    fused form needs no extra join at all.
+  *    Multi-pass features fold into the same pass: run and session lengths
+  *    as window columns + conditional aggs, the trimmed mean as a buffering
+  *    aggregate — an earlier design joined them back as separate
+  *    per-conversation frames, but the fused form needs no extra join.
   *
   * Per-role features use conditional aggregation over the KNOWN role set
   * (`when(role === r, ...)`) instead of a pivot — no second shuffle.

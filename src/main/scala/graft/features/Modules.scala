@@ -3,19 +3,21 @@ package graft.features
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ops.{LagLead, Sessionize}
-import graft.functions.Stats
+import graft.ops.LagLead
+import graft.functions.{Stats, TrimmedMeanAgg}
 
 /** The built-in transcript feature modules (SURVEY.md §7.1 item 5).
   * Each cites the musiF analog it re-expresses.
   *
   * Design rule (scale): NO module re-aggregates its own frame. Multi-level
-  * features (session lengths, run lengths, trimmed means) are computed as
-  * window columns over the SAME enriched frame and folded into the single
-  * shared HashAggregate via conditional aggregation — so the whole flagship
-  * matrix is ONE scan of the turns table, one range exchange, a fused
-  * window stack, one aggregate. (A naive per-module groupBy design was
-  * measured to re-scan the source once per module.)
+  * features are folded into the single shared HashAggregate: session and
+  * run lengths via window columns read on END rows, the trimmed mean as an
+  * aggregate expression. Every window orders by (conv_id, turn_idx), so the
+  * flagship matrix is ONE scan of the turns table, one exchange, ONE sort
+  * and three Window operators after the as-of merge (lag/lead/row_number,
+  * then the session and the run running starts), one aggregate (plan shape
+  * pinned by PlanShapeSpec). A naive per-module groupBy design was
+  * measured to re-scan the source once per module.
   */
 
 /** Census: per-role and whole-conversation counts — musiF `core` + `scoring`
@@ -86,31 +88,30 @@ object LagModule extends FeatureModule {
     count(when(col("prev_role") === col("role"), 1)).as("n_role_repeats"))
 }
 
-/** Sessions — W9 + A19 (harmony/utils.py:207-271 pattern). Session lengths
-  * materialize as a window count per (conv, session); the aggregate reads
-  * them only on session-start rows.
+/** Sessions — W9 + A19 (harmony/utils.py:207-271 pattern). A session
+  * breaks where the gap between consecutive turns exceeds `gapSeconds`
+  * (NULL gap = no break, as in [[graft.ops.Sessionize.byGap]]); lengths are
+  * measured on session END rows.
   */
 class SessionModuleBase(gapSeconds: Long) extends FeatureModule {
   val name = "sessions"
   override val deps: Seq[String] = Seq("lag")
-  // Session lengths WITHOUT a (conv, session)-partitioned window: that frame
-  // would add another full sort of the fact table. Instead, in the one
-  // (conv, turn_idx) sort: forward-fill the row-number of each session
-  // start; on each session END row the length is rn - start_rn + 1.
+  // Boundaries straight from the turn gaps, lengths as rn - ffilled(start
+  // rn) + 1: no (conv, session) frame, no second sort. The row_number/lead
+  // columns come before any column computed from them, so Catalyst fuses
+  // them into LagModule's Window (lead(false, 1, true) is true on the last
+  // row only).
   override def enrich(turns: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))
-    val wCum = w.rowsBetween(Window.unboundedPreceding, 0)
-    val sess = Sessionize.byGap(turns, gapSeconds)
-    sess
+    val w = LagLead.convWindow()
+    val gapUs = gapSeconds * 1000000L
+    def breaks(gap: Column): Column = coalesce(gap > gapUs, lit(false))
+    turns
       .withColumn("__rn", row_number().over(w))
-      .withColumn("sess_start",
-        lag(col("session_id"), 1).over(w).isNull ||
-          lag(col("session_id"), 1).over(w) =!= col("session_id"))
-      .withColumn("sess_end",
-        lead(col("session_id"), 1).over(w).isNull ||
-          lead(col("session_id"), 1).over(w) =!= col("session_id"))
-      .withColumn("__sess_start_rn",
-        last(when(col("sess_start"), col("__rn")), ignoreNulls = true).over(wCum))
+      .withColumn("sess_end", lead(lit(false), 1, true).over(w) ||
+        breaks(LagLead.micros(lead(col("ts"), 1).over(w)) - LagLead.micros(col("ts"))))
+      .withColumn("sess_start", col("__rn") === 1 || breaks(col("delta_ts_us")))
+      .withColumn("__sess_start_rn", last(when(col("sess_start"), col("__rn")),
+        ignoreNulls = true).over(w.rowsBetween(Window.unboundedPreceding, 0)))
       .withColumn("sess_len",
         when(col("sess_end"), col("__rn") - col("__sess_start_rn") + 1).cast("long"))
   }
@@ -137,31 +138,32 @@ object DensityModule extends FeatureModule {
 
 /** Text-length moments + exact trimmed mean — musiF A5/A6
   * (melody/handler.py:133-312,577-607) with scipy bias=False parity.
-  * Trim ranks are a window ordered by length within the same conv_id
-  * partitioning (extra sort, no extra exchange).
+  * The trimmed mean is an aggregate in the shared pass (no rank window, no
+  * extra sort): n counts every row, NULL `text_len` ranks first, ⌊0.1·n⌋
+  * ranks are dropped from each tail and the kept non-NULL lengths averaged.
+  * Known oracle divergence, untested by any fixture (none has NULL text):
+  * the DuckDB oracle's `ORDER BY length(text)` ranks NULLs LAST, so a
+  * conversation with NULL text would trim different rows there;
+  * FeatureMatrixSpec pins the Spark side.
   */
 object TextStatsModule extends FeatureModule {
   val name = "textstats"
-  private val len = col("text_len").cast("double")
   override val deps: Seq[String] = Seq("asofstate")
-  override def enrich(turns: DataFrame): DataFrame = {
-    val wRank = Window.partitionBy(col("conv_id")).orderBy(col("text_len"), col("turn_idx"))
-    val wAll = Window.partitionBy(col("conv_id"))
-    turns
-      .withColumn("__len_rn", row_number().over(wRank))
-      .withColumn("__len_n", count(lit(1)).over(wAll))
+  override def aggs: Seq[Column] =
+    aggsWith(stddev_samp(_), Stats.skewnessSample, Stats.kurtosisSample)
+
+  private[features] def aggsWith(std: Column => Column, skew: Column => Column,
+                                 kurt: Column => Column): Seq[Column] = {
+    val len = col("text_len").cast("double")
+    Seq(
+      round(avg(len), 6).as("len_mean"),
+      round(std(len), 6).as("len_std"),
+      round(skew(len), 6).as("len_skew"),
+      round(kurt(len), 6).as("len_kurt"),
+      min(len).cast("long").as("len_min"),
+      max(len).cast("long").as("len_max"),
+      round(TrimmedMeanAgg(0.1)(len), 6).as("len_trim_mean"))
   }
-  override def aggs: Seq[Column] = Seq(
-    round(avg(len), 6).as("len_mean"),
-    round(stddev_samp(len), 6).as("len_std"),
-    round(Stats.skewnessSample(len), 6).as("len_skew"),
-    round(Stats.kurtosisSample(len), 6).as("len_kurt"),
-    min(len).cast("long").as("len_min"),
-    max(len).cast("long").as("len_max"),
-    round(avg(when(
-      col("__len_rn") > floor(col("__len_n") * 0.1) &&
-        col("__len_rn") <= col("__len_n") - floor(col("__len_n") * 0.1), len)), 6)
-      .as("len_trim_mean"))
 }
 
 /** Window-mode drop-in for [[TextStatsModule]]: same feature names, but
@@ -171,20 +173,9 @@ object TextStatsModule extends FeatureModule {
   */
 object TextStatsWindowModule extends FeatureModule {
   val name = "textstats"
-  private val len = col("text_len").cast("double")
   override val deps: Seq[String] = Seq("asofstate")
-  override def enrich(turns: DataFrame): DataFrame = TextStatsModule.enrich(turns)
-  override def aggs: Seq[Column] = Seq(
-    round(avg(len), 6).as("len_mean"),
-    round(Stats.stddevSampPow(len), 6).as("len_std"),
-    round(Stats.skewnessSamplePow(len), 6).as("len_skew"),
-    round(Stats.kurtosisSamplePow(len), 6).as("len_kurt"),
-    min(len).cast("long").as("len_min"),
-    max(len).cast("long").as("len_max"),
-    round(avg(when(
-      col("__len_rn") > floor(col("__len_n") * 0.1) &&
-        col("__len_rn") <= col("__len_n") - floor(col("__len_n") * 0.1), len)), 6)
-      .as("len_trim_mean"))
+  override def aggs: Seq[Column] = TextStatsModule.aggsWith(
+    Stats.stddevSampPow, Stats.skewnessSamplePow, Stats.kurtosisSamplePow)
 }
 
 /** Role-run structure — W2 (melody/handler.py:675-689 ascent/descent runs).
@@ -192,21 +183,17 @@ object TextStatsWindowModule extends FeatureModule {
   */
 object RunLengthModule extends FeatureModule {
   val name = "runlength"
-  override val deps: Seq[String] = Seq("sessions") // reuse its __rn column
-  // Same single-sort technique as SessionModule: run length measured on run
-  // END rows as rn - ffilled(start rn) + 1 — no (conv, run_id) window.
+  override val deps: Seq[String] = Seq("sessions") // its __rn; lag's roles
+  // Same single-sort technique as sessions, on LagModule's prev/next roles:
+  // run length measured on run END rows as rn - ffilled(start rn) + 1.
   override def enrich(turns: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))
-    val wCum = w.rowsBetween(Window.unboundedPreceding, 0)
+    def differs(other: String): Column =
+      col(other).isNull || col(other) =!= col("role")
     turns
-      .withColumn("run_start",
-        lag(col("role"), 1).over(w).isNull ||
-          lag(col("role"), 1).over(w) =!= col("role"))
-      .withColumn("run_end",
-        lead(col("role"), 1).over(w).isNull ||
-          lead(col("role"), 1).over(w) =!= col("role"))
-      .withColumn("__run_start_rn",
-        last(when(col("run_start"), col("__rn")), ignoreNulls = true).over(wCum))
+      .withColumn("run_start", differs("prev_role"))
+      .withColumn("run_end", differs("next_role"))
+      .withColumn("__run_start_rn", last(when(col("run_start"), col("__rn")),
+        ignoreNulls = true).over(LagLead.convWindow().rowsBetween(Window.unboundedPreceding, 0)))
       .withColumn("run_len",
         when(col("run_end"), col("__rn") - col("__run_start_rn") + 1).cast("long"))
   }

@@ -92,6 +92,22 @@ class OpsVariantsSpec extends SparkSpec {
     assert(secs < 60, s"took ${secs}s — buffering regressed to quadratic?")
   }
 
+  test("TrimmedMeanAgg ranks NULLs like the window-rank form: first, counted in n") {
+    // k = ⌊0.1·n⌋ with n counting NULLs: NULLs trimmed, NULLs kept, all NULL
+    val v = Seq[(String, Option[Double])](
+      ("a", None), ("a", None), ("a", Some(4)), ("a", Some(1)), ("a", Some(6)),
+      ("a", Some(8)), ("a", Some(2)), ("a", Some(7)), ("a", Some(5)), ("a", Some(3)),
+      ("b", Some(9)), ("b", None), ("c", None)) ++
+      (1 to 12).map(i => ("d", if (i % 4 == 0) None else Some(i.toDouble)))
+    val df = v.toDF("conv_id", "v")
+    val agg = df.groupBy("conv_id")
+      .agg(round(graft.functions.TrimmedMeanAgg(0.1)(col("v")), 6).as("tm"))
+    val oracle = graft.functions.Stats.trimmedMean(df, "v", 0.1, "tm", "conv_id")
+    assert(agg.exceptAll(oracle).isEmpty && oracle.exceptAll(agg).isEmpty,
+      s"${agg.collect().toSeq} vs ${oracle.collect().toSeq}")
+    assert(agg.filter(col("conv_id") === "a").head().getDouble(1) == 4.0)
+  }
+
   test("banded simhash near-dup equals all-pairs form (pigeonhole completeness)") {
     import graft.functions.TextFns._
     // random-ish 60-bit hashes plus planted near-dups at hamming 1..6

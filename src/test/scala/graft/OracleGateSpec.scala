@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import scala.sys.process.{Process, ProcessLogger}
 import com.fasterxml.jackson.databind.ObjectMapper
 
-/** The near-dup family against its DuckDB oracles, inside the unit suite:
+/** Query families against their DuckDB oracles, inside the unit suite:
   * each query's output is dumped the way `graft.Verify` dumps it (one
   * parquet directory per key plus `oracle_sql.json`) and `tools/check.py`
   * compares it with the oracle SQL. Cancelled when python3 cannot import
@@ -13,16 +13,11 @@ import com.fasterxml.jackson.databind.ObjectMapper
   */
 class OracleGateSpec extends SparkSpec {
   private val sfDir = "/root/testdata/sf0.001"
-  private val keys = Seq(
-    "q_neardup_lsh", "q_neardup_cosine", "q_simhash_neardup",
-    "q_incremental_neardup", "q_minhash_error", "q_dedup_clusters",
-    "q_dedup_clusters_star", "q_dedup_keeper_best", "q_split_leakage_safe",
-    "q_soft_dedup", "q_dup_matrix", "q_containment", "q_contain_prune")
 
   private def deleteTree(p: Path): Unit =
     Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.delete)
 
-  test("near-dup family matches its DuckDB oracles (tools/check.py ALL PASS)") {
+  private def checkAgainstOracles(keys: Seq[String]): Unit = {
     assume(Process(Seq("python3", "-c", "import duckdb")).!(ProcessLogger(_ => ())) == 0,
       "python3 cannot import duckdb")
     val out = Files.createTempDirectory("oracle-gate")
@@ -37,5 +32,18 @@ class OracleGateSpec extends SparkSpec {
         sfDir, out.toString)).!(ProcessLogger(append, append))
       assert(rc == 0 && log.toString.linesIterator.contains("ALL PASS"), log.toString)
     } finally deleteTree(out)
+  }
+
+  test("near-dup family matches its DuckDB oracles (tools/check.py ALL PASS)") {
+    checkAgainstOracles(Seq(
+      "q_neardup_lsh", "q_neardup_cosine", "q_simhash_neardup",
+      "q_incremental_neardup", "q_minhash_error", "q_dedup_clusters",
+      "q_dedup_clusters_star", "q_dedup_keeper_best", "q_split_leakage_safe",
+      "q_soft_dedup", "q_dup_matrix", "q_containment", "q_contain_prune"))
+  }
+
+  test("feature-matrix family matches its DuckDB oracles (tools/check.py ALL PASS)") {
+    checkAgainstOracles(Seq(
+      "q_feature_matrix", "q_feature_matrix_windowed", "q_feature_matrix_windowed_full"))
   }
 }

@@ -18,6 +18,9 @@ class PlanShapeSpec extends SparkSpec {
   private def exchanges(p: String): Int = count(p, "Exchange (hash|range|Single)")
   private def aggs(p: String): Int =
     count(p, "HashAggregate|SortAggregate|ObjectHashAggregate")
+  /** Plan nodes named `op` (tree prefix stripped, first word compared). */
+  private def nodes(p: String, op: String): Int =
+    p.linesIterator.count(_.replaceFirst("^[\\s:|+-]*", "").takeWhile(_ != ' ') == op)
 
   test("no query plans a cartesian product or an unexpected sort-merge join") {
     // every join in the library is either broadcastable by construction
@@ -44,10 +47,22 @@ class PlanShapeSpec extends SparkSpec {
     // + aggregate) + small state exchange + final ORDER BY — the as-of
     // left side must NOT re-shuffle (hash-clustered layout contract)
     assert(exchanges(p) <= 3, s"flagship exchange count regressed: ${exchanges(p)}")
+    // the module window stack: ONE sort by (conv_id, turn_idx) and three
+    // Windows (lag/lead/row_number, then the session and run running
+    // starts) between the as-of merge and the aggregate; the totals add
+    // the turn-numbering window, its sort, the state sort and the ORDER BY
+    val ls = p.linesIterator.toSeq
+    val stack = ls.slice(ls.indexWhere(_.contains("ObjectHashAggregate")),
+      ls.indexWhere(_.contains("AsOfMerge"))).mkString("\n")
+    assert(nodes(stack, "Window") == 3 && nodes(stack, "Sort") == 1,
+      s"flagship window stack regrew:\n$p")
+    assert(nodes(p, "Window") == 4 && nodes(p, "Sort") == 4, s"flagship plan:\n$p")
     val w = plan("q_feature_matrix_windowed_full")
     assert(w.contains("AsOfMerge"), "windowed-full must run the native as-of exec")
     assert(aggs(w) == 2, s"windowed-full must stay a single fused aggregate pair, got ${aggs(w)}")
     assert(exchanges(w) <= 4, s"windowed-full exchange count regressed: ${exchanges(w)}")
+    // the flagship's nodes plus the fan-out's window_id window
+    assert(nodes(w, "Window") == 5 && nodes(w, "Sort") == 4, s"windowed-full plan:\n$w")
   }
 
   test("dup-spans: one corpus tokenize pass, no self-join, bounded exchanges") {

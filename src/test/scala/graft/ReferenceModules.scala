@@ -1,0 +1,121 @@
+package graft
+
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import graft.features._
+import graft.functions.Stats
+import graft.ops.Sessionize
+
+/** The multi-window formulation of the session, run-length and trimmed-mean
+  * modules — the reference [[FeatureMatrixSpec]] holds the single-sort
+  * modules to, row for row. Sessions come from the cumulative
+  * [[Sessionize.byGap]] id, run boundaries from their own lag/lead(role),
+  * and trim ranks from a `row_number over (text_len, turn_idx)` window with
+  * n = `count over conv_id`: eight Window operators over three sorts.
+  */
+object ReferenceModules {
+
+  class Sessions(gapSeconds: Long) extends FeatureModule {
+    val name = "sessions"
+    override val deps: Seq[String] = Seq("lag")
+    override def enrich(turns: DataFrame): DataFrame = {
+      val w = Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))
+      val wCum = w.rowsBetween(Window.unboundedPreceding, 0)
+      Sessionize.byGap(turns, gapSeconds)
+        .withColumn("__rn", row_number().over(w))
+        .withColumn("sess_start",
+          lag(col("session_id"), 1).over(w).isNull ||
+            lag(col("session_id"), 1).over(w) =!= col("session_id"))
+        .withColumn("sess_end",
+          lead(col("session_id"), 1).over(w).isNull ||
+            lead(col("session_id"), 1).over(w) =!= col("session_id"))
+        .withColumn("__sess_start_rn",
+          last(when(col("sess_start"), col("__rn")), ignoreNulls = true).over(wCum))
+        .withColumn("sess_len",
+          when(col("sess_end"), col("__rn") - col("__sess_start_rn") + 1).cast("long"))
+    }
+    override def aggs: Seq[Column] = Seq(
+      count(when(col("sess_end"), 1)).as("n_sessions"),
+      round(avg(when(col("sess_end"), col("sess_len"))), 6).as("sess_len_mean"),
+      max(when(col("sess_end"), col("sess_len"))).as("sess_len_max"))
+  }
+
+  private val len = col("text_len").cast("double")
+
+  private def trimRanks(turns: DataFrame): DataFrame = {
+    val wRank = Window.partitionBy(col("conv_id")).orderBy(col("text_len"), col("turn_idx"))
+    turns
+      .withColumn("__len_rn", row_number().over(wRank))
+      .withColumn("__len_n", count(lit(1)).over(Window.partitionBy(col("conv_id"))))
+  }
+
+  private val trimMean: Column = round(avg(when(
+    col("__len_rn") > floor(col("__len_n") * 0.1) &&
+      col("__len_rn") <= col("__len_n") - floor(col("__len_n") * 0.1), len)), 6)
+    .as("len_trim_mean")
+
+  object TextStats extends FeatureModule {
+    val name = "textstats"
+    override val deps: Seq[String] = Seq("asofstate")
+    override def enrich(turns: DataFrame): DataFrame = trimRanks(turns)
+    override def aggs: Seq[Column] = Seq(
+      round(avg(len), 6).as("len_mean"),
+      round(stddev_samp(len), 6).as("len_std"),
+      round(Stats.skewnessSample(len), 6).as("len_skew"),
+      round(Stats.kurtosisSample(len), 6).as("len_kurt"),
+      min(len).cast("long").as("len_min"),
+      max(len).cast("long").as("len_max"),
+      trimMean)
+  }
+
+  object TextStatsWindow extends FeatureModule {
+    val name = "textstats"
+    override val deps: Seq[String] = Seq("asofstate")
+    override def enrich(turns: DataFrame): DataFrame = trimRanks(turns)
+    override def aggs: Seq[Column] = Seq(
+      round(avg(len), 6).as("len_mean"),
+      round(Stats.stddevSampPow(len), 6).as("len_std"),
+      round(Stats.skewnessSamplePow(len), 6).as("len_skew"),
+      round(Stats.kurtosisSamplePow(len), 6).as("len_kurt"),
+      min(len).cast("long").as("len_min"),
+      max(len).cast("long").as("len_max"),
+      trimMean)
+  }
+
+  object RunLength extends FeatureModule {
+    val name = "runlength"
+    override val deps: Seq[String] = Seq("sessions")
+    override def enrich(turns: DataFrame): DataFrame = {
+      val w = Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))
+      val wCum = w.rowsBetween(Window.unboundedPreceding, 0)
+      turns
+        .withColumn("run_start",
+          lag(col("role"), 1).over(w).isNull ||
+            lag(col("role"), 1).over(w) =!= col("role"))
+        .withColumn("run_end",
+          lead(col("role"), 1).over(w).isNull ||
+            lead(col("role"), 1).over(w) =!= col("role"))
+        .withColumn("__run_start_rn",
+          last(when(col("run_start"), col("__rn")), ignoreNulls = true).over(wCum))
+        .withColumn("run_len",
+          when(col("run_end"), col("__rn") - col("__run_start_rn") + 1).cast("long"))
+    }
+    override def aggs: Seq[Column] = Seq(
+      count(when(col("run_end"), 1)).as("n_runs"),
+      round(avg(when(col("run_end"), col("run_len"))), 6).as("run_len_mean"),
+      max(when(col("run_end"), col("run_len"))).as("run_len_max"))
+  }
+
+  /** `modules` with each single-sort module swapped for its reference
+    * twin (the gap is the caller's; other modules pass through).
+    */
+  def of(modules: Seq[FeatureModule], gapSeconds: Long): Seq[FeatureModule] =
+    modules.map {
+      case _: SessionModuleBase  => new Sessions(gapSeconds)
+      case TextStatsModule       => TextStats
+      case TextStatsWindowModule => TextStatsWindow
+      case RunLengthModule       => RunLength
+      case m                     => m
+    }
+}
