@@ -561,11 +561,12 @@ object SparkEntry {
     // ——— dedup COMPLETION: keeper assignment via connected components ———
     // Near-dup detection yields pairs; production dedup needs one KEEPER
     // per duplicate cluster (pairs are not transitive-closed: a~b, b~c
-    // without a~c still must collapse to one keeper). Components by
-    // iterative min-label propagation over the verified LSH pairs
-    // (ops.Components — convergence-checked, so the fixpoint is the exact
-    // component minimum regardless of iteration order); every corpus doc
-    // gets a keeper (singletons keep themselves).
+    // without a~c still must collapse to one keeper). Components over the
+    // verified LSH pairs (ops.Components.minLabel): a pair graph within
+    // the broadcast budget is labelled by one driver union-find; larger
+    // graphs run convergence-checked min-label propagation with the star
+    // fallback. Either way the label is the exact component minimum;
+    // every corpus doc gets a keeper (singletons keep themselves).
     "q_dedup_clusters" -> ((s, dir) =>
       NearDup.clusterOf(Tables.documents(s, dir).select(col("doc_id")),
           neardupLshPairs(s, dir), as = "keeper")

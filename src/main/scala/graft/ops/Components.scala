@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Connected components over an undirected edge list — the dedup-completion
   * operator: near-dup detection emits PAIRS, but pairs are not transitively
@@ -10,19 +12,23 @@ import org.apache.spark.sql.functions._
   * corpus is curated); this is part of the beyond-reference training-data
   * pipeline tier (SURVEY.md §6).
   *
-  * Two algorithms, one contract (label = component-minimum node id,
-  * partition-order independent — the property the DuckDB oracle's
-  * recursive-CTE closure reproduces exactly):
+  * One contract (label = component-minimum node id, partition-order
+  * independent — the property the DuckDB oracle's recursive-CTE closure
+  * reproduces exactly), three algorithms chosen by graph size and shape:
   *
-  *  - [[minLabel]]: iterative min-label propagation, O(diameter) rounds.
-  *    The expected shape for dedup graphs — small, dense components
-  *    (duplicate clusters) on an edge list orders of magnitude smaller
-  *    than the corpus, converging in a handful of rounds. Rounds are run
-  *    in FUSED PAIRS (two propagation joins per materialization +
-  *    convergence action), and round 1 is folded into the seed (label =
-  *    min(node, min direct neighbor) is one aggregate, no join), so the
-  *    fixed per-round cost — `localCheckpoint` lineage truncation plus a
-  *    blocking convergence read — is paid half as often.
+  *  - driver union-find ([[minLabel]], graphs within the broadcast budget):
+  *    the dedup shape — a few hundred verified pairs — is read to the
+  *    driver in one job and labelled there. At that size the distributed
+  *    loop below spends its ~23 jobs on Spark's per-job floor, not on data.
+  *  - iterative min-label propagation ([[minLabel]], larger graphs),
+  *    O(diameter) rounds. The expected shape for dedup graphs — small,
+  *    dense components (duplicate clusters) on an edge list orders of
+  *    magnitude smaller than the corpus, converging in a handful of
+  *    rounds. Rounds are run in FUSED PAIRS (two propagation joins per
+  *    materialization + convergence action), and round 1 is folded into
+  *    the seed (label = min(node, min direct neighbor) is one aggregate,
+  *    no join), so the fixed per-round cost — `localCheckpoint` lineage
+  *    truncation plus a blocking convergence read — is paid half as often.
   *  - [[starContract]]: alternating large-star/small-star contraction
   *    (Kiveris et al., "Connected Components in MapReduce and Beyond",
   *    SoCC'14 — public algorithm), O(log n) rounds REGARDLESS of
@@ -30,15 +36,12 @@ import org.apache.spark.sql.functions._
   *    clusters (shingled spam, boilerplate chains) where propagation's
   *    O(diameter) loop would not terminate in bounded rounds.
   *
-  * [[minLabel]] hitting its iteration cap automatically falls back to
+  * Propagation hitting its iteration cap automatically falls back to
   * [[starContract]] on the same edges instead of failing — the cap is a
   * shape detector, not an error.
   */
 object Components {
 
-  /** @return (node, label) — label = min node id reachable from `node`;
-    *         every node appearing in either edge column gets a row.
-    */
   /** Iterative stages must be sized to the GRAPH, not the corpus: the
     * near-dup edge list is orders of magnitude smaller than the documents
     * table, and running each tiny propagation round at the session's
@@ -71,22 +74,93 @@ object Components {
     try body finally conf.set("spark.sql.shuffle.partitions", prev)
   }
 
+  /** Labels each node of the undirected graph `edges(a, b)` with its
+    * component's minimum node id.
+    *
+    * The edge pipeline is materialized once. A graph of at most
+    * `autoBroadcastJoinThreshold / 32` edges with BIGINT ids is then read
+    * to the driver in one job and labelled by a union-find, returned as a
+    * local frame. The budget is Spark's own: an edge is two 8-byte ids
+    * and yields up to two label rows, so the driver path runs exactly when
+    * Spark would ship the label frame whole to every executor anyway. A
+    * larger graph, other id types, or a threshold ≤ 0 (broadcast
+    * disabled) run the distributed propagation loop, which falls back to
+    * [[starContract]] after `maxIters` rounds.
+    *
+    * Edges with a NULL endpoint are dropped on both paths (a NULL id is no
+    * node): a node seen only beside a NULL gets no row, and
+    * `NearDup.clusterOf` keeps such a node as its own cluster.
+    *
+    * @return (node, label) — label = min node id reachable from `node`;
+    *         every node of an edge without NULLs gets a row.
+    */
   def minLabel(edges: DataFrame, a: String, b: String, maxIters: Int = 50): DataFrame = {
     // Materialize the (possibly expensive) edge pipeline ONCE, BEFORE any
-    // union references it (r7): symmetrize is a two-branch union, and a
-    // union's branches each re-plan and re-execute their subtree — the
-    // old symmetrize-then-checkpoint ran the whole LSH pair pipeline
-    // twice per query. The symmetrized view is then a cheap two-branch
-    // union over the checkpoint blocks and needs no second
-    // materialization at fixture width (AQE leaves small pipelines at
-    // 1-2 partitions); a wide checkpoint gets the dst layout so no
-    // propagation round re-exchanges the edge side.
-    val ec = edges.select(col(a).as("src"), col(b).as("dst")).localCheckpoint()
-    val parts = graphParts(2L * ec.count())
-    val sym0 = ec.unionByName(ec.select(col("dst").as("src"), col("src").as("dst")))
-    val sym = if (ec.rdd.getNumPartitions * 2 > parts * 4)
-      sym0.repartition(parts, col("dst")).localCheckpoint() else sym0
-    withShuffleParts(ec, parts) { minLabelLoop(sym, ec, maxIters) }
+    // read or union references it (r7): symmetrize is a two-branch union,
+    // and a union's branches each re-plan and re-execute their subtree —
+    // the old symmetrize-then-checkpoint ran the whole LSH pair pipeline
+    // twice per query.
+    val ec = edges.select(col(a).as("src"), col(b).as("dst"))
+      .filter(col("src").isNotNull && col("dst").isNotNull)
+      .localCheckpoint()
+    val budget = driverBudget(ec)
+    // one job whatever the checkpoint's width: a single task walks its
+    // blocks in turn and stops at budget + 1 rows
+    val head = if (budget > 0) ec.coalesce(1).limit(budget + 1).collect() else Array.empty[Row]
+    if (budget > 0 && head.length <= budget) driverLabels(ec.sparkSession, head)
+    else {
+      // The symmetrized view is a cheap two-branch union over the
+      // checkpoint blocks and needs no second materialization at fixture
+      // width (AQE leaves small pipelines at 1-2 partitions); a wide
+      // checkpoint gets the dst layout so no propagation round
+      // re-exchanges the edge side.
+      val parts = graphParts(2L * ec.count())
+      val sym0 = ec.unionByName(ec.select(col("dst").as("src"), col("src").as("dst")))
+      val sym = if (ec.rdd.getNumPartitions * 2 > parts * 4)
+        sym0.repartition(parts, col("dst")).localCheckpoint() else sym0
+      withShuffleParts(ec, parts) { minLabelLoop(sym, ec, maxIters) }
+    }
+  }
+
+  /** Edges the driver path takes: `autoBroadcastJoinThreshold / 32`, 0
+    * (never) when broadcast is disabled or the ids are not BIGINT.
+    */
+  private def driverBudget(ec: DataFrame): Int =
+    if (ec.schema.forall(_.dataType == LongType))
+      math.max(0L, math.min(Int.MaxValue - 1L,
+        Bridge.sqlConf(ec.sparkSession).autoBroadcastJoinThreshold / 32)).toInt
+    else 0
+
+  /** Union-find over driver-resident (src, dst) rows, linking by minimum
+    * root: nodes are indexed in ascending id order, so every root is its
+    * component's minimum index, i.e. its minimum id.
+    */
+  private def driverLabels(spark: SparkSession, edges: Array[Row]): DataFrame = {
+    val ends = new Array[Long](2 * edges.length)
+    edges.indices.foreach { i =>
+      ends(2 * i) = edges(i).getLong(0)
+      ends(2 * i + 1) = edges(i).getLong(1)
+    }
+    java.util.Arrays.sort(ends)
+    var n = 0
+    ends.indices.foreach { i =>
+      if (i == 0 || ends(i) != ends(i - 1)) { ends(n) = ends(i); n += 1 }
+    }
+    val parent = Array.range(0, n)
+    def find(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    def index(id: Long): Int = java.util.Arrays.binarySearch(ends, 0, n, id)
+    edges.foreach { e =>
+      val (x, y) = (find(index(e.getLong(0))), find(index(e.getLong(1))))
+      if (x < y) parent(y) = x else if (y < x) parent(x) = y
+    }
+    val labels = java.util.Arrays.asList((0 until n).map(i => Row(ends(i), ends(find(i)))): _*)
+    spark.createDataFrame(labels, StructType(Seq(
+      StructField("node", LongType, nullable = false),
+      StructField("label", LongType, nullable = false))))
   }
 
   private def minLabelLoop(sym: DataFrame, ec: DataFrame,

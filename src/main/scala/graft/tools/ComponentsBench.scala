@@ -9,6 +9,12 @@ import org.apache.spark.sql.functions._
   * propagation rounds + convergence reads) is visible independently of
   * ambient noise on the expensive pair pipeline.
   *
+  * `label` times `minLabel`'s distributed propagation loop (broadcast
+  * disabled for that call, so the graph cannot take the driver path) —
+  * the like-for-like twin of `star`; `driver` is the same labelling at the
+  * session's own broadcast threshold, which small graphs take through the
+  * driver union-find.
+  *
   *   sbt -batch "runMain graft.tools.ComponentsBench [sfDir] [reps]"
   */
 object ComponentsBench {
@@ -35,9 +41,16 @@ object ComponentsBench {
       }
       val nPairs = pairs.count()
       val (lbl, tLabel) = sec {
-        graft.ops.Components.minLabel(pairs, "da", "db").localCheckpoint()
+        val key = "spark.sql.autoBroadcastJoinThreshold"
+        val prev = spark.conf.get(key)
+        spark.conf.set(key, "-1")
+        try graft.ops.Components.minLabel(pairs, "da", "db").localCheckpoint()
+        finally spark.conf.set(key, prev)
       }
       val nNodes = lbl.count()
+      val (_, tDriver) = sec {
+        graft.ops.Components.minLabel(pairs, "da", "db").localCheckpoint()
+      }
       val (_, tJoin) = sec {
         graft.ops.NearDup.clusterOf(graft.Tables.documents(spark, sfDir).select(col("doc_id")),
             pairs, (_, _, _) => lbl, "keeper")
@@ -48,7 +61,7 @@ object ComponentsBench {
       }
       val nStar = lblStar.count()
       println(f"rep $rep: pairs=$tPairs%.2fs (n=$nPairs) label=$tLabel%.2fs " +
-        f"(nodes=$nNodes) star=$tStar%.2fs (nodes=$nStar) " +
+        f"(nodes=$nNodes) driver=$tDriver%.2fs star=$tStar%.2fs (nodes=$nStar) " +
         f"keeperJoin=$tJoin%.2fs total=${tPairs + tLabel + tJoin}%.2fs")
     }
     spark.stop()

@@ -28,6 +28,11 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** The session's SQL conf, typed (`RuntimeConfig` only hands out strings). */
+  def sqlConf(spark: org.apache.spark.sql.SparkSession):
+      org.apache.spark.sql.internal.SQLConf =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
+
   /** Session extension point for extra planner strategies. */
   def experimental(spark: org.apache.spark.sql.SparkSession):
       org.apache.spark.sql.ExperimentalMethods =
