@@ -567,10 +567,12 @@ object SparkEntry {
     // graphs run convergence-checked min-label propagation with the star
     // fallback. Either way the label is the exact component minimum;
     // every corpus doc gets a keeper (singletons keep themselves).
-    "q_dedup_clusters" -> ((s, dir) =>
-      NearDup.clusterOf(Tables.documents(s, dir).select(col("doc_id")),
-          neardupLshPairs(s, dir), as = "keeper")
-        .orderBy("doc_id")),
+    "q_dedup_clusters" -> ((s, dir) => {
+      val docs = Tables.documents(s, dir)
+      NearDup.clusterOf(docs.select(col("doc_id")),
+          neardupLshPairs(docs, carrySource = false), as = "keeper")
+        .orderBy("doc_id")
+    }),
 
     // ——— dedup completion via STAR CONTRACTION (oracle-pinned) ———
     // Same contract and oracle as q_dedup_clusters, but the components run
@@ -580,10 +582,12 @@ object SparkEntry {
     // only by specs (r5 VERDICT → r6 #2). With both registry entries
     // green, the fallback swap inside minLabel is between two
     // independently oracle-verified algorithms.
-    "q_dedup_clusters_star" -> ((s, dir) =>
-      NearDup.clusterOf(Tables.documents(s, dir).select(col("doc_id")),
-          neardupLshPairs(s, dir), Components.starContract(_, _, _), "keeper")
-        .orderBy("doc_id")),
+    "q_dedup_clusters_star" -> ((s, dir) => {
+      val docs = Tables.documents(s, dir)
+      NearDup.clusterOf(docs.select(col("doc_id")), neardupLshPairs(docs, carrySource = false),
+          Components.starContract(_, _, _), "keeper")
+        .orderBy("doc_id")
+    }),
 
     // ——— quality-aware keeper selection ———
     // Production dedup does not keep the minimum doc_id — it keeps the
@@ -595,10 +599,10 @@ object SparkEntry {
     // struct — exact, no string encoding needed on the Spark side).
     "q_dedup_keeper_best" -> ((s, dir) => {
       import graft.functions.TextFns
-      val pairs = neardupLshPairs(s, dir)
       val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), round(TextFns.qualityScore(col("text")), 6).as("q"))
-      val clustered = NearDup.clusterOf(docs, pairs)
+      val clustered = NearDup.clusterOf(
+        docs.select(col("doc_id"), round(TextFns.qualityScore(col("text")), 6).as("q")),
+        neardupLshPairs(docs, carrySource = false))
       val keepers = clustered.groupBy(col("cluster"))
         .agg(max_by(col("doc_id"),
             struct(col("q"), (-col("doc_id")).as("nd"))).as("keeper"),
@@ -620,8 +624,9 @@ object SparkEntry {
     "q_split_leakage_safe" -> ((s, dir) => {
       import graft.functions.TextFns.md5Long
       val h = md5Long(concat_ws("#", lit("split"), col("keeper"))) % 100
-      NearDup.clusterOf(Tables.documents(s, dir).select(col("doc_id")),
-          neardupLshPairs(s, dir), as = "keeper")
+      val docs = Tables.documents(s, dir)
+      NearDup.clusterOf(docs.select(col("doc_id")),
+          neardupLshPairs(docs, carrySource = false), as = "keeper")
         .select(col("doc_id"), col("keeper"),
           when(h < 80, "train").when(h < 90, "val").otherwise("test").as("split"))
         .orderBy("doc_id")
@@ -662,8 +667,9 @@ object SparkEntry {
     // pipeline. Weight is one correctly-rounded division of exact
     // integers (no intermediate float).
     "q_soft_dedup" -> ((s, dir) => {
-      val clustered = NearDup.clusterOf(Tables.documents(s, dir).select(col("doc_id")),
-        neardupLshPairs(s, dir))
+      val docs = Tables.documents(s, dir)
+      val clustered = NearDup.clusterOf(docs.select(col("doc_id")),
+        neardupLshPairs(docs, carrySource = false))
       val sizes = clustered.groupBy("cluster")
         .agg(count(lit(1)).as("cluster_size"))
       clustered.join(sizes, Seq("cluster"))
@@ -2388,35 +2394,24 @@ object SparkEntry {
     // exact = the verify stage's Jaccard, UNfiltered (calibration needs
     // the whole candidate range, not just ≥ 0.9 keepers); abs_err is one
     // IEEE subtract of two identical doubles. ONE minhash pass total: the
-    // per-doc signature vector is aggregated once and BOTH derived forms —
-    // band keys (4-value CSV md5, bkey-identical to lshBandSigs by
-    // construction, spec-pinned) and the est seed-match — slice it;
-    // candidates come from NearDup.bucketPairs, exact sides resolve in one
-    // documents scan (NearDup.resolvePairs, Jaccard without the threshold).
+    // per-doc signature vector is computed once and BOTH derived forms —
+    // band keys ([[lshBandKeys]], the banding of lshBandSigs) and the est
+    // seed-match — slice it; candidates come from NearDup.bucketPairs,
+    // exact sides resolve in one documents scan (NearDup.resolvePairs,
+    // Jaccard without the threshold).
     "q_minhash_error" -> ((s, dir) => {
       import graft.functions.TextFns._
       val docs = Tables.documents(s, dir)
-      // Per-doc 8-slot signature in ONE aggregation pass (the lshBandSigs
-      // r7 shape: k seed-minima as k columns, assembled row-locally into
-      // the seed-ordered array — bit-identical to the previous
-      // minhashRows → re-agg → docs join chain without its extra exchange
-      // and scan), MATERIALIZED once: the frame is referenced three times
-      // (banding + both per-side signature joins) and each lazy reference
-      // re-executes the whole minhash pipeline (was 9 parquet scans in
-      // the plan; now 2 + one checkpointed 1-row-per-doc frame).
-      val toks = spreadSmallScan(docs).select(col("doc_id"), col("source"),
-        explode(distinctTokens(col("text"))).as("tok"))
-      val mins = (0 until 8).map(sd =>
-        min(md5Long(concat_ws("|", lit(sd).cast("string"), col("tok")))).as(s"__m$sd"))
-      val sig = toks.groupBy(col("doc_id"), col("source"))
-        .agg(mins.head, mins.tail: _*)
-        .select(col("doc_id"), col("source"),
-          array((0 until 8).map(i => col(s"__m$i")): _*).as("sig"))
+      // Per-doc 8-slot signature, row-local (the MinHashExpr kernel after
+      // the spread), MATERIALIZED once: the frame is referenced three
+      // times (banding + both per-side signature joins) and each lazy
+      // reference would re-execute the whole minhash pipeline. A NULL-text
+      // doc keeps a NULL sig, which bands to no rows and so never pairs.
+      val sig = spreadSmallScan(docs)
+        .select(col("doc_id"), col("source"), minhashSig(col("text"), MinHashK).as("sig"))
         .localCheckpoint()
       val banded = sig.select(col("doc_id"), col("source"),
-        posexplode(array((0 until 2).map(b =>
-          md5Long(array_join(transform(slice(col("sig"), b * 4 + 1, 4),
-            v => v.cast("string")), ","))): _*)).as(Seq("band", "bkey")))
+        posexplode(lshBandKeys(col("sig"))).as(Seq("band", "bkey")))
       val cand = NearDup.bucketPairs(banded, Seq("source", "band", "bkey"), "doc_id")
       val exact = NearDup.resolvePairs(docs, cand, "doc_id", tokenSet, ("sa", "sb"))
         .withColumn("i", size(array_intersect(col("sa"), col("sb"))))
@@ -2428,9 +2423,9 @@ object SparkEntry {
         .withColumn("n_match", aggregate(zip_with(col("siga"), col("sigb"),
           (a, b) => when(a === b, 1).otherwise(0)), lit(0), (acc, x) => acc + x))
         .select(col("da"), col("db"),
-          round(col("n_match").cast("double") / 8, 6).as("est_jaccard"),
+          round(col("n_match").cast("double") / MinHashK, 6).as("est_jaccard"),
           round(col("j"), 6).as("jaccard"),
-          round(abs(col("n_match").cast("double") / 8 - round(col("j"), 6)), 6)
+          round(abs(col("n_match").cast("double") / MinHashK - round(col("j"), 6)), 6)
             .as("abs_err"))
         .orderBy("da", "db")
     }),
@@ -2490,7 +2485,10 @@ object SparkEntry {
     * needs (doc_id, text); emits (inner_doc, outer_doc, containment) for
     * every direction whose trigram containment |A∩B|/|A| clears 0.9 —
     * exact-integer threshold (10·i ≥ 9·n), rounded score for reporting
-    * only. See the registry entry's comment for the blocking contract.
+    * only. See the registry entry's comment for the blocking contract; a
+    * document made entirely of corpus-hot shingles is left to
+    * [[graft.ops.DupSpans.spans]] (CorpusStatsSpec "containment ↔ dup
+    * spans hand-off").
     */
   private[graft] def containmentPairs(docs: DataFrame): DataFrame = {
     import graft.functions.TextFns.md5Long
@@ -2710,43 +2708,51 @@ object SparkEntry {
     *        pair set). Saves q_dup_matrix two corpus joins.
     */
   private[graft] def neardupLshPairs(s: SparkSession, dir: String,
-                                     carrySource: Boolean = false): DataFrame = {
-    val docs = Tables.documents(s, dir)
+                                     carrySource: Boolean = false): DataFrame =
+    neardupLshPairs(Tables.documents(s, dir), carrySource)
+
+  /** [[neardupLshPairs]] over a `documents` frame the caller also reads
+    * (the dedup-completion queries cluster the same scan). */
+  private[graft] def neardupLshPairs(docs: DataFrame, carrySource: Boolean): DataFrame = {
     val carry = if (carrySource) Seq("source") else Nil
     val cand = NearDup.bucketPairs(lshBandSigs(docs), Seq("source", "band", "bkey"),
       "doc_id", carry = carry)
     lshVerify(docs, cand, carry)
   }
 
+  /** MinHash slots per signature: 2 bands of 4. */
+  private final val MinHashK = 8
+
   /** Per-(doc, band) LSH signature rows `(doc_id, band, bkey, source)` —
     * the banding stage of [[neardupLshPairs]], factored so the incremental
     * path can compute it for a NEW SLICE only and persist it
-    * ([[graft.features.SignatureStore]], VERDICT r5 #7).
+    * ([[graft.features.SignatureStore]], VERDICT r5 #7). One row per
+    * doc_id in `docs`.
     */
   private[graft] def lshBandSigs(docs: DataFrame): DataFrame = {
-    import graft.functions.TextFns._
-    // ONE aggregation pass (r7): the k seed-minima land as k columns of a
-    // single token-exploded groupBy — the band keys are then row-local
-    // md5s over the 4-column CSV slices, bit-identical to the previous
-    // explode → collect_list(sort by seed) → array_join round-trip but
-    // without its second exchange; `source` rides the grouping key
-    // (functionally dependent on doc_id) instead of a join back to the
-    // documents scan. Was: minhashRows → re-agg per (doc,band) → join
-    // docs — two extra stages per LSH-family query.
-    val toks = spreadSmallScan(docs).select(col("doc_id"), col("source"),
-      explode(distinctTokens(col("text"))).as("tok"))
-    val mins = (0 until 8).map(s =>
-      min(md5Long(concat_ws("|", lit(s).cast("string"), col("tok")))).as(s"__m$s"))
-    val bands = (0 until 2).map(b =>
-      struct(lit(b).as("band"),
-        md5Long(concat_ws(",",
-          (4 * b until 4 * b + 4).map(i => col(s"__m$i").cast("string")): _*)).as("bkey")))
-    toks.groupBy(col("doc_id"), col("source"))
-      .agg(mins.head, mins.tail: _*)
-      .select(col("doc_id"), explode(array(bands: _*)).as("__b"), col("source"))
-      .select(col("doc_id"), col("__b.band").as("band"),
-        col("__b.bkey").as("bkey"), col("source"))
+    // Row-local after the spread: the MinHashExpr kernel signs each doc
+    // where it lands (no token explode, no per-doc exchange to collect
+    // minima — bit-identical to that min-aggregate form, MinHashSpec), and
+    // `source` simply rides the row. The signature is its own projection
+    // so the band keys slice it instead of re-running the kernel.
+    spreadSmallScan(docs)
+      .select(col("doc_id"), col("source"),
+        graft.functions.TextFns.minhashSig(col("text"), MinHashK).as("sig"))
+      .select(col("doc_id"), posexplode(lshBandKeys(col("sig"))).as(Seq("band", "bkey")),
+        col("source"))
   }
+
+  /** The 2 band keys of an 8-slot signature: md5Long of each 4-slot CSV
+    * (decimal minhashes joined by ","); NULL for a NULL signature, so it
+    * explodes to no rows. A generator over this EXPRESSION, not over a
+    * `sig` attribute, so InferFiltersFromGenerate adds no `size(sig) > 0`
+    * filter that PushDownPredicates would push under the projection —
+    * re-running the kernel there (the trap [[trigramArr]] describes).
+    */
+  private def lshBandKeys(sig: Column): Column =
+    when(sig.isNotNull, array((0 until 2).map(b =>
+      graft.functions.TextFns.md5Long(concat_ws(",",
+        (4 * b until 4 * b + 4).map(i => sig(i).cast("string")): _*))): _*))
 
   /** Exact-Jaccard verify of candidate pairs (da < db) → pairs with
     * jaccard ≥ 0.9; both sides' token sets come from one documents scan
@@ -2835,9 +2841,11 @@ object SparkEntry {
       |ORDER BY 1""".stripMargin
 
   /** ONE oracle for q_dedup_clusters AND q_dedup_clusters_star: the two
-    * registry entries run different component algorithms (O(diameter)
-    * min-label propagation vs O(log n) star contraction) against one
-    * semantic contract — the recursive-CTE transitive closure seeded from
+    * registry entries run different component algorithms —
+    * `Components.minLabel` (one driver union-find when the pair graph fits
+    * the broadcast budget, else min-label propagation with the star
+    * fallback) vs O(log n) star contraction directly — against one
+    * semantic contract: the recursive-CTE transitive closure seeded from
     * ALL documents (singletons keep themselves).
     */
   private lazy val dedupClustersOracle: String =

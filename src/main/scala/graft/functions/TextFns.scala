@@ -2,11 +2,12 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 /** Text-analysis column expressions for large-scale training-data
   * pipelines: tokenization, quality scoring, language-ID heuristic,
   * fingerprinting, and the hash primitives shared by MinHash/SimHash
-  * dedup. All pure Catalyst expressions (codegen'd) — no UDFs; hashes are
+  * dedup. All Catalyst expressions (codegen'd or native) — no UDFs; hashes are
   * md5-based so the DuckDB oracle can reproduce them bit-exactly.
   */
 object TextFns {
@@ -54,32 +55,25 @@ object TextFns {
   /** Document fingerprint: md5Long of the full text. */
   def fingerprint(text: Column): Column = md5Long(text)
 
+  /** k-slot MinHash signature of a text's distinct tokens, `array<bigint>`
+    * (slot s = min over tokens of md5Long(s + "|" + tok)); NULL for NULL
+    * text. One native [[MinHashExpr]] call per row — see there for why it
+    * replaces the token-explode + k `min` aggregate form.
+    */
+  def minhashSig(text: Column, k: Int): Column =
+    Bridge.column(MinHashExpr(Bridge.expression(distinctTokens(text)), k))
+
   /** Per-(doc, seed) MinHash values over distinct tokens.
-    * Input: (idCol, textCol); output: (idCol, seed:int, minhash:long).
-    *
-    * ONE aggregation pass: the k seed-hashes are k `min` aggregates over
-    * the exploded tokens (same single-pass shape as [[simhash]]'s 60
-    * conditional sums), exploded back to (seed, minhash) rows only at DOC
-    * level. The naive form — crossJoin the token rows with a k-row seed
-    * table, then groupBy (doc, seed) — shuffles k× the token rows; this
-    * shuffles them once (map-side partials) and fans out k× only after
-    * aggregation (k·|docs| rows, not k·|tokens|).
+    * Input: (idCol, textCol), one row per id; output: (idCol, seed:int,
+    * minhash:long). Row-local: the [[minhashSig]] array posexploded, so
+    * no token rows and no shuffle.
     *
     * Scale path for near-dups: band the signature (seed / bandSize) and
     * group on (band, hash of band-slice) to get candidate pairs without
     * the quadratic join (see q_neardup_lsh).
     */
-  def minhashRows(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
-    val toks = df.select(col(idCol), explode(distinctTokens(col(textCol))).as("tok"))
-    val mins = (0 until k).map(s =>
-      min(md5Long(concat_ws("|", lit(s).cast("string"), col("tok")))).as(s"__m$s"))
-    val pairs = (0 until k).map(s =>
-      struct(lit(s).as("seed"), col(s"__m$s").as("minhash")))
-    toks.groupBy(col(idCol))
-      .agg(mins.head, mins.tail: _*)
-      .select(col(idCol), explode(array(pairs: _*)).as("__sm"))
-      .select(col(idCol), col("__sm.seed").as("seed"), col("__sm.minhash").as("minhash"))
-  }
+  def minhashRows(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
+    df.select(col(idCol), posexplode(minhashSig(col(textCol), k)).as(Seq("seed", "minhash")))
 
   /** 60-bit SimHash per doc: majority vote of token-hash bits (+1/-1 per
     * distinct token). Input: (idCol, textCol); output: (idCol,

@@ -43,12 +43,13 @@ object Ordered {
     // stages that reuse this exchange onto 2-3 tasks while the rest of
     // the machine idles — compute-bound stages must be sized by the
     // session's configured width, not by shuffle bytes. The width is the
-    // session's `spark.sql.shuffle.partitions` (the scale-configured
-    // knob — the cluster run sets it to thousands, the local bench to
-    // its core count), NOT a constant; an explicit count is exempt from
-    // AQE coalescing, so the layout behaves identically whether
-    // coalescing is on (per-query bench) or off (scaling pairs).
-    val sp = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    // session's shuffle partition count (the scale-configured knob — the
+    // cluster run sets it to thousands, the local bench to its core
+    // count), NOT a constant, read typed as Spark's own exchanges read
+    // it; an explicit count is exempt from AQE coalescing, so the layout
+    // behaves identically whether coalescing is on (per-query bench) or
+    // off (scaling pairs).
+    val sp = org.apache.spark.sql.graft.Bridge.sqlConf(df.sparkSession).numShufflePartitions
     df.repartition(sp, col(key))
   }
 

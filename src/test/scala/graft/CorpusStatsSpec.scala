@@ -361,6 +361,28 @@ class CorpusStatsSpec extends SparkSpec {
     assert(kept == Set(1L, 3L, 4L), s"kept $kept")
   }
 
+  test("containment ↔ dup spans hand-off: an all-hot-shingle doc is dup spans' job") {
+    // boilerplate block B sits in 12 docs, so each of its trigrams has
+    // df = 13 > 10 (hot); doc 100 is B alone — wholly contained in every
+    // carrier, yet without one rare shingle the blocking cannot pair it.
+    // Docs 200/201 are the control: a 10-token run R shared by two docs
+    // only (rare), found at containment 1.0.
+    val B = (1 to 12).map(i => s"B$i")
+    val R = (1 to 10).map(i => s"R$i")
+    def u(p: String, n: Int) = (1 to n).map(i => s"$p$i")
+    val docs = ((100L -> B) +: (1L to 12L).map(id => id -> (B ++ u(s"f${id}_", 6))) :+
+        (200L -> R) :+ (201L -> (u("g", 4) ++ R ++ u("h", 4))))
+      .map { case (id, ts) => (id, ts.mkString(" ")) }.toDF("doc_id", "text")
+    val pairs = SparkEntry.containmentPairs(docs)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(pairs == Set((200L, 201L, 1.0)), s"got $pairs")
+    // dup spans take the hand-off: the whole of doc 100 is one span
+    import graft.ops.DupSpans
+    val spans = DupSpans.spans(docs.select(col("doc_id"), split(col("text"), " ").as("a")), k = 5)
+      .as[(Long, Long, Long)].collect().filter(_._1 == 100L).toSeq
+    assert(spans == Seq((100L, 0L, B.size - 1L)), s"doc 100 spans: $spans")
+  }
+
   test("corpus card: volumes partition the corpus, dup rate fires, shares bounded") {
     val dir = "/root/testdata/sf0.001"
     val docs = Tables.documents(spark, dir)

@@ -36,7 +36,7 @@ class OracleGateSpec extends SparkSpec {
 
   test("near-dup family matches its DuckDB oracles (tools/check.py ALL PASS)") {
     checkAgainstOracles(Seq(
-      "q_neardup_lsh", "q_neardup_cosine", "q_simhash_neardup",
+      "q_minhash", "q_neardup_lsh", "q_neardup_cosine", "q_simhash_neardup",
       "q_incremental_neardup", "q_minhash_error", "q_dedup_clusters",
       "q_dedup_clusters_star", "q_dedup_keeper_best", "q_split_leakage_safe",
       "q_soft_dedup", "q_dup_matrix", "q_containment", "q_contain_prune"))

@@ -174,6 +174,24 @@ class PlanShapeSpec extends SparkSpec {
     assert(exchanges(plan("q_simhash_neardup")) <= 4)
   }
 
+  test("MinHash signatures are row-local: no aggregate, no hash exchange") {
+    // the kernel signs each document where the spread lands it: no token
+    // explode, no groupBy(doc) exchange collecting the minima. The only
+    // exchanges left are the spread's round-robin and q_minhash's
+    // ORDER BY range exchange.
+    val band = SparkEntry.lshBandSigs(Tables.documents(spark, "/root/testdata/sf0.001"))
+      .queryExecution.executedPlan.toString
+    val mh = plan("q_minhash")
+    def kinds(p: String) = "Exchange (\\w+)".r.findAllMatchIn(p).map(_.group(1)).toSeq
+    for ((n, p) <- Seq("lshBandSigs" -> band, "q_minhash" -> mh)) {
+      assert(aggs(p) == 0, s"$n aggregates:\n$p")
+      assert(count(p, "Exchange hashpartitioning") == 0, s"$n hash-exchanges:\n$p")
+      assert(count(p, "Generate explode") == 0, s"$n explodes tokens:\n$p")
+    }
+    assert(kinds(band).forall(_ == "RoundRobinPartitioning"), band)
+    assert(kinds(mh).filterNot(_ == "RoundRobinPartitioning") == Seq("rangepartitioning"), mh)
+  }
+
   test("decontamination: eval vocabulary broadcasts, corpus side never shuffles for the join") {
     val p = plan("q_decontaminate")
     assert(count(p, "BroadcastHashJoin") == 1,

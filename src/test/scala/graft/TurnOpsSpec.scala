@@ -59,6 +59,16 @@ class TurnOpsSpec extends SparkSpec {
     assert(both == Map(6 -> 2L, 7 -> 2L))
   }
 
+  test("clusteredPartitions takes its width from the session's shuffle partitions") {
+    val df = (1 to 50).map(i => (i % 7, i)).toDF("k", "v")
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "5")
+      assert(Ordered.clusteredPartitions(df, "k").rdd.getNumPartitions == 5)
+    } finally spark.conf.set(key, before)
+  }
+
   test("lag features: first row has null prev, exact micro deltas") {
     val t = Seq(
       ("a", 0, "user", "hi", ts("2024-01-01 00:00:00.000001")),
