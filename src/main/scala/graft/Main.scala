@@ -85,6 +85,7 @@ object Main {
       else
         (Tables.turns(spark, input), Some(Tables.state(spark, input)))
 
+    val fmt = cfg.str("format").getOrElse("parquet")
     // incremental mode: treat the input as ONE APPENDED SLICE, upsert its
     // per-conversation partials into the durable generation store
     // (config `state_dir`), and write the store's finalized features — the
@@ -102,17 +103,12 @@ object Main {
       val gap = cfg.long("session_gap_seconds", SparkEntry.SessionGapSeconds)
       features.IncrementalStore.upsert(spark, stateDir, turns, gap)
       val m = postProcess(features.IncrementalStore.features(spark, stateDir), cfg)
-      cfg.str("format").getOrElse("parquet") match {
-        case "csv"     => PostProcess.saveCsv(m, output)
-        case "parquet" => PostProcess.saveParquet(m, output)
-        case other     => throw new IllegalArgumentException(s"format parquet|csv, got $other")
-      }
+      save(m, fmt, output)
       System.err.println(s"[graft] incremental upsert done → $output (state: $stateDir)")
       return
     }
 
     val shards = cfg.int("shards", 1)
-    val fmt = cfg.str("format").getOrElse("parquet")
     if (shards > 1) {
       // fail fast on silently-unsupported combinations (ADVICE r2):
       //  - the resumable path always writes parquet shards; a csv request
@@ -135,13 +131,15 @@ object Main {
       System.err.println(s"[graft] ${recs.size} shard(s) written; lineage in $output/_manifest")
     } else {
       val m = postProcess(buildMatrix(spark, cfg, turns, state), cfg)
-      fmt match {
-        case "csv"     => PostProcess.saveCsv(m, output)
-        case "parquet" => PostProcess.saveParquet(m, output)
-        case other     => throw new IllegalArgumentException(s"format parquet|csv, got $other")
-      }
+      save(m, fmt, output)
     }
     System.err.println(s"[graft] done → $output")
+  }
+
+  private def save(m: DataFrame, fmt: String, output: String): Unit = fmt match {
+    case "csv"     => PostProcess.saveCsv(m, output)
+    case "parquet" => PostProcess.saveParquet(m, output)
+    case other     => throw new IllegalArgumentException(s"format parquet|csv, got $other")
   }
 
   def parseArgs(args: Array[String]): GraftConfig = {

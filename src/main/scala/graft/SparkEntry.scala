@@ -564,9 +564,9 @@ object SparkEntry {
     // without a~c still must collapse to one keeper). Components over the
     // verified LSH pairs (ops.Components.minLabel): a pair graph within
     // the broadcast budget is labelled by one driver union-find; larger
-    // graphs run convergence-checked min-label propagation with the star
-    // fallback. Either way the label is the exact component minimum;
-    // every corpus doc gets a keeper (singletons keep themselves).
+    // graphs run star contraction. Either way the label is the exact
+    // component minimum; every corpus doc gets a keeper (singletons keep
+    // themselves).
     "q_dedup_clusters" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       NearDup.clusterOf(docs.select(col("doc_id")),
@@ -576,12 +576,11 @@ object SparkEntry {
 
     // ——— dedup completion via STAR CONTRACTION (oracle-pinned) ———
     // Same contract and oracle as q_dedup_clusters, but the components run
-    // through the O(log n) large-star/small-star contraction DIRECTLY —
-    // the giant-diameter fallback path (Kiveris et al., SoCC'14) that was
-    // previously reachable only via minLabel's iteration cap and pinned
-    // only by specs (r5 VERDICT → r6 #2). With both registry entries
-    // green, the fallback swap inside minLabel is between two
-    // independently oracle-verified algorithms.
+    // through the O(log n) large-star/small-star contraction (Kiveris et
+    // al., SoCC'14) at every graph size — the path minLabel takes over its
+    // driver budget, which the sf fixtures' pair graphs never exceed. With
+    // both registry entries green, minLabel's two algorithms are each
+    // oracle-verified.
     "q_dedup_clusters_star" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       NearDup.clusterOf(docs.select(col("doc_id")), neardupLshPairs(docs, carrySource = false),
@@ -2843,10 +2842,10 @@ object SparkEntry {
   /** ONE oracle for q_dedup_clusters AND q_dedup_clusters_star: the two
     * registry entries run different component algorithms —
     * `Components.minLabel` (one driver union-find when the pair graph fits
-    * the broadcast budget, else min-label propagation with the star
-    * fallback) vs O(log n) star contraction directly — against one
-    * semantic contract: the recursive-CTE transitive closure seeded from
-    * ALL documents (singletons keep themselves).
+    * the broadcast budget, else star contraction) vs O(log n) star
+    * contraction directly — against one semantic contract: the
+    * recursive-CTE transitive closure seeded from ALL documents
+    * (singletons keep themselves).
     */
   private lazy val dedupClustersOracle: String =
     s"""WITH RECURSIVE $neardupPairsCtes,

@@ -138,7 +138,6 @@ object GraftConfig {
     "format" -> "parquet",    // parquet | csv
     "window" -> Map("size" -> 8L, "overlap" -> 2L),
     "session_gap_seconds" -> 86400L,
-    "episode_reset_seconds" -> 604800L,
     "shards" -> 1L,
     "post" -> Map("reference_names" -> false)
   )

@@ -14,41 +14,30 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *
   * One contract (label = component-minimum node id, partition-order
   * independent — the property the DuckDB oracle's recursive-CTE closure
-  * reproduces exactly), three algorithms chosen by graph size and shape:
+  * reproduces exactly), two algorithms chosen by graph size:
   *
   *  - driver union-find ([[minLabel]], graphs within the broadcast budget):
   *    the dedup shape — a few hundred verified pairs — is read to the
-  *    driver in one job and labelled there. At that size the distributed
-  *    loop below spends its ~23 jobs on Spark's per-job floor, not on data.
-  *  - iterative min-label propagation ([[minLabel]], larger graphs),
-  *    O(diameter) rounds. The expected shape for dedup graphs — small,
-  *    dense components (duplicate clusters) on an edge list orders of
-  *    magnitude smaller than the corpus, converging in a handful of
-  *    rounds. Rounds are run in FUSED PAIRS (two propagation joins per
-  *    materialization + convergence action), and round 1 is folded into
-  *    the seed (label = min(node, min direct neighbor) is one aggregate,
-  *    no join), so the fixed per-round cost — `localCheckpoint` lineage
-  *    truncation plus a blocking convergence read — is paid half as often.
+  *    driver in one job and labelled there, where a distributed loop would
+  *    spend its jobs on Spark's per-job floor, not on data.
   *  - [[starContract]]: alternating large-star/small-star contraction
   *    (Kiveris et al., "Connected Components in MapReduce and Beyond",
   *    SoCC'14 — public algorithm), O(log n) rounds REGARDLESS of
-  *    component diameter. The 100-TB fallback for chain-shaped duplicate
-  *    clusters (shingled spam, boilerplate chains) where propagation's
-  *    O(diameter) loop would not terminate in bounded rounds.
-  *
-  * Propagation hitting its iteration cap automatically falls back to
-  * [[starContract]] on the same edges instead of failing — the cap is a
-  * shape detector, not an error.
+  *    component diameter, for every graph over the budget. No
+  *    O(diameter) min-label propagation loop is kept: over the budget,
+  *    contraction measured as fast or faster on small clusters and on
+  *    long chains alike.
   */
 object Components {
 
   /** Iterative stages must be sized to the GRAPH, not the corpus: the
     * near-dup edge list is orders of magnitude smaller than the documents
-    * table, and running each tiny propagation round at the session's
-    * corpus-tuned shuffle width pays ~8 stages × width in task-launch
-    * overhead per round (measured: 1.2s/round at width 32 on a 91k-edge
-    * graph vs ~0.2s at width 1). The edge list is already materialized, so
-    * its exact count is free — ~100k edges per partition, capped.
+    * table, and running each tiny round at the session's corpus-tuned
+    * shuffle width pays several stages × width in task-launch overhead per
+    * round (measured: star contraction on 2,000 diameter-59 chains at
+    * width 200 ran 17.3–24.2 s unnarrowed vs 7.9–8.3 s narrowed). The edge
+    * list is already materialized, so its exact count is free — ~100k
+    * edges per partition, capped.
     */
   private def graphParts(nEdges: Long): Int =
     math.max(1L, math.min(2048L, nEdges / 100000L + 1L)).toInt
@@ -84,8 +73,7 @@ object Components {
     * and yields up to two label rows, so the driver path runs exactly when
     * Spark would ship the label frame whole to every executor anyway. A
     * larger graph, other id types, or a threshold ≤ 0 (broadcast
-    * disabled) run the distributed propagation loop, which falls back to
-    * [[starContract]] after `maxIters` rounds.
+    * disabled) run star contraction on the same materialized edges.
     *
     * Edges with a NULL endpoint are dropped on both paths (a NULL id is no
     * node): a node seen only beside a NULL gets no row, and
@@ -94,33 +82,25 @@ object Components {
     * @return (node, label) — label = min node id reachable from `node`;
     *         every node of an edge without NULLs gets a row.
     */
-  def minLabel(edges: DataFrame, a: String, b: String, maxIters: Int = 50): DataFrame = {
-    // Materialize the (possibly expensive) edge pipeline ONCE, BEFORE any
-    // read or union references it (r7): symmetrize is a two-branch union,
-    // and a union's branches each re-plan and re-execute their subtree —
-    // the old symmetrize-then-checkpoint ran the whole LSH pair pipeline
-    // twice per query.
-    val ec = edges.select(col(a).as("src"), col(b).as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .localCheckpoint()
+  def minLabel(edges: DataFrame, a: String, b: String): DataFrame = {
+    val ec = edgeCheckpoint(edges, a, b)
     val budget = driverBudget(ec)
     // one job whatever the checkpoint's width: a single task walks its
     // blocks in turn and stops at budget + 1 rows
     val head = if (budget > 0) ec.coalesce(1).limit(budget + 1).collect() else Array.empty[Row]
     if (budget > 0 && head.length <= budget) driverLabels(ec.sparkSession, head)
-    else {
-      // The symmetrized view is a cheap two-branch union over the
-      // checkpoint blocks and needs no second materialization at fixture
-      // width (AQE leaves small pipelines at 1-2 partitions); a wide
-      // checkpoint gets the dst layout so no propagation round
-      // re-exchanges the edge side.
-      val parts = graphParts(2L * ec.count())
-      val sym0 = ec.unionByName(ec.select(col("dst").as("src"), col("src").as("dst")))
-      val sym = if (ec.rdd.getNumPartitions * 2 > parts * 4)
-        sym0.repartition(parts, col("dst")).localCheckpoint() else sym0
-      withShuffleParts(ec, parts) { minLabelLoop(sym, ec, maxIters) }
-    }
+    else starFrom(ec)
   }
+
+  /** The edge pipeline as (u, v) without NULL endpoints, materialized
+    * ONCE: every later read or union references the checkpoint blocks, not
+    * the (possibly expensive) pair pipeline, which a union's branches would
+    * otherwise each re-execute.
+    */
+  private def edgeCheckpoint(edges: DataFrame, a: String, b: String): DataFrame =
+    edges.select(col(a).as("u"), col(b).as("v"))
+      .filter(col("u").isNotNull && col("v").isNotNull)
+      .localCheckpoint()
 
   /** Edges the driver path takes: `autoBroadcastJoinThreshold / 32`, 0
     * (never) when broadcast is disabled or the ids are not BIGINT.
@@ -131,7 +111,7 @@ object Components {
         Bridge.sqlConf(ec.sparkSession).autoBroadcastJoinThreshold / 32)).toInt
     else 0
 
-  /** Union-find over driver-resident (src, dst) rows, linking by minimum
+  /** Union-find over driver-resident (u, v) rows, linking by minimum
     * root: nodes are indexed in ascending id order, so every root is its
     * component's minimum index, i.e. its minimum id.
     */
@@ -163,64 +143,13 @@ object Components {
       StructField("label", LongType, nullable = false))))
   }
 
-  private def minLabelLoop(sym: DataFrame, ec: DataFrame,
-                           maxIters: Int): DataFrame = {
-    // seed = round 1 folded into initialization: with labels initialized to
-    // node ids, the first propagation round computes exactly
-    // min(node, min direct neighbor) — one aggregate over sym, no join
-    var lbl = sym.groupBy(col("src").as("node")).agg(min(col("dst")).as("__mn"))
-      .select(col("node"), least(col("node"), col("__mn")).as("label"))
-      .localCheckpoint()
-    // One propagation step in ONE join + ONE aggregate (r7): unioning the
-    // label frame into the aggregation input is the self-loop trick —
-    // min over {own label} ∪ {neighbor labels} ≡ the old
-    // propagate-then-least left join, with one fewer join and one fewer
-    // exchange per step (iterates are identical row-for-row: labels
-    // start at node ids and only decrease).
-    def step(l: DataFrame): DataFrame =
-      sym.join(l.select(col("node").as("dst"), col("label")), "dst")
-        .select(col("src").as("node"), col("label"))
-        .unionByName(l)
-        .groupBy(col("node")).agg(min(col("label")).as("label"))
-    // Convergence (r7): labels are positive, start at node ids, and only
-    // ever DECREASE, so the label sum is strictly monotone until the
-    // fixpoint — "sum unchanged across a fused pair" ⇔ both steps were
-    // no-ops ⇔ fixpoint. One exact decimal aggregate over the
-    // already-materialized checkpoint replaces the carried round-start
-    // label + change-flag column (decimal, not long: at 10¹² nodes a
-    // long sum of 10¹²-sized ids overflows).
-    def labelSum(l: DataFrame): java.math.BigDecimal =
-      l.agg(coalesce(sum(col("label").cast("decimal(38,0)")), lit(java.math.BigDecimal.ZERO)))
-        .head.getDecimal(0)
-    var prevSum = labelSum(lbl)
-    var iter = 1 // the seed IS round 1
-    var converged = false
-    while (!converged && iter < maxIters) {
-      iter += 2
-      val next = step(step(lbl)).localCheckpoint()
-      val s = labelSum(next)
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      lbl = next
-    }
-    if (!converged) {
-      // giant-diameter component: propagation's O(diameter) loop is the
-      // wrong algorithm — swap to the O(log n) contraction, same contract
-      // (handed the already-materialized edge checkpoint, not the
-      // original pipeline — the fallback must not re-run it)
-      System.err.println(s"[components] minLabel hit the $maxIters-round cap " +
-        "(giant-diameter component) — falling back to large-star/small-star contraction")
-      starContract(ec, "src", "dst")
-    } else lbl
-  }
-
   /** Alternating large-star/small-star connected components. Each round is
     * two grouped aggregates + joins over the CURRENT edge set (which only
     * shrinks toward one star per component); convergence is an
     * order-independent edge-set signature reaching a fixed point, checked
     * on the already-materialized checkpoint. Converges in O(log n) rounds
-    * on any graph shape — the web-scale path for components whose diameter
-    * exceeds what propagation can walk.
+    * on any graph shape — the path for every graph over [[minLabel]]'s
+    * driver budget.
     *
     *  - large-star: every node links its LARGER neighbors to the minimum
     *    of its closed neighborhood;
@@ -228,26 +157,21 @@ object Components {
     *    itself) to that minimum.
     *
     * At the fixpoint each component is a star centered on its minimum
-    * node, so the edge list IS the (node → label) mapping.
+    * node, so the edge list IS the (node → label) mapping. Edges with a
+    * NULL endpoint are dropped, as in [[minLabel]].
     */
-  def starContract(edges: DataFrame, a: String, b: String, maxRounds: Int = 60): DataFrame = {
-    // ONE materialization of the (possibly expensive) edge pipeline (r7):
-    // the old nodes-union + e0 chain referenced `edges` in three union/
-    // filter branches, executing the whole pair pipeline three times per
-    // query. `nodes` stays lazy over the checkpoint blocks — it is
-    // referenced once, by the final label join.
-    val ec = edges.select(col(a).as("u"), col(b).as("v")).localCheckpoint()
+  def starContract(edges: DataFrame, a: String, b: String, maxRounds: Int = 60): DataFrame =
+    starFrom(edgeCheckpoint(edges, a, b), maxRounds)
+
+  /** Star contraction over an edge checkpoint from [[edgeCheckpoint]].
+    * `nodes` stays lazy over the checkpoint blocks — it is referenced
+    * once, by the final label join.
+    */
+  private def starFrom(ec: DataFrame, maxRounds: Int = 60): DataFrame = {
     val nodes = ec.select(col("u").as("node"))
       .unionByName(ec.select(col("v").as("node")))
       .distinct()
-    val e0 = ec.filter(col("u") =!= col("v")).distinct().localCheckpoint()
-    withShuffleParts(e0, graphParts(e0.count())) {
-      starLoop(nodes, e0, maxRounds)
-    }
-  }
-
-  private def starLoop(nodes: DataFrame, e0: DataFrame, maxRounds: Int): DataFrame = {
-    var e = e0
+    var e = ec.filter(col("u") =!= col("v")).distinct().localCheckpoint()
 
     // min over the closed neighborhood of each node of `d` (d must hold
     // every direction that matters to the caller)
@@ -288,31 +212,33 @@ object Components {
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
 
-    var sig = signature(e)
-    var round = 0
-    var done = sig._1 == 0L // no edges → all singletons
-    while (!done && round < maxRounds) {
-      // ONE star op per materialization (r7) — each star op references
-      // its input ~4× (the symmetrized union feeds both the neighborhood
-      // join and closedMin), so even composing small∘large in one plan
-      // executed the inner largeStar ~4× per round; the same subplan-
-      // replication argument that kept two ROUNDS from fusing (measured
-      // 21.5s vs 11.8s on the fixture graph) applies one level down
-      // (measured again r7: 4.9s vs 3.0s of components time at sf0.1).
-      round += 1
-      val ls = largeStar(e).localCheckpoint()
-      val next = smallStar(ls).localCheckpoint()
-      val s2 = signature(next)
-      done = s2 == sig
-      sig = s2
-      e = next
+    withShuffleParts(e, graphParts(e.count())) {
+      var sig = signature(e)
+      var round = 0
+      var done = sig._1 == 0L // no edges → all singletons
+      while (!done && round < maxRounds) {
+        // ONE star op per materialization (r7) — each star op references
+        // its input ~4× (the symmetrized union feeds both the neighborhood
+        // join and closedMin), so even composing small∘large in one plan
+        // executed the inner largeStar ~4× per round; the same subplan-
+        // replication argument that kept two ROUNDS from fusing (measured
+        // 21.5s vs 11.8s on the fixture graph) applies one level down
+        // (measured again r7: 4.9s vs 3.0s of components time at sf0.1).
+        round += 1
+        val ls = largeStar(e).localCheckpoint()
+        val next = smallStar(ls).localCheckpoint()
+        val s2 = signature(next)
+        done = s2 == sig
+        sig = s2
+        e = next
+      }
+      require(done, s"star contraction did not converge in $maxRounds rounds — " +
+        "not a graph-shape issue (contraction is O(log n) on any shape); " +
+        "inspect the edge list for pathological input")
+      // materialize inside the narrowed-shuffle scope (see withShuffleParts)
+      nodes.join(e.select(col("u").as("node"), col("v").as("__lbl")), Seq("node"), "left")
+        .select(col("node"), coalesce(col("__lbl"), col("node")).as("label"))
+        .localCheckpoint()
     }
-    require(done, s"star contraction did not converge in $maxRounds rounds — " +
-      "not a graph-shape issue (contraction is O(log n) on any shape); " +
-      "inspect the edge list for pathological input")
-    // materialize inside the narrowed-shuffle scope (see withShuffleParts)
-    nodes.join(e.select(col("u").as("node"), col("v").as("__lbl")), Seq("node"), "left")
-      .select(col("node"), coalesce(col("__lbl"), col("node")).as("label"))
-      .localCheckpoint()
   }
 }

@@ -10,24 +10,47 @@ import graft.ops.{Components, NearDup}
   * transitive closure over near-dup PAIRS — the dedup-completion step.
   * Every `minLabel` case runs on both of its paths: as configured (these
   * graphs fit the broadcast budget, so the driver union-find labels them)
-  * and with broadcast disabled (the distributed propagation loop).
+  * and with broadcast disabled (star contraction).
   */
 class ComponentsSpec extends SparkSpec {
   import spark.implicits._
 
-  /** `body` with broadcast joins disabled: `minLabel` then takes its
-    * distributed path whatever the graph's size. */
-  private def distributed[T](body: => T): T = {
+  /** `body` with the broadcast threshold set to `bytes`; `minLabel`'s
+    * driver budget is `bytes / 32` edges. */
+  private def withBroadcastThreshold[T](bytes: Long)(body: => T): T = {
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val prev = spark.conf.get(key)
-    spark.conf.set(key, "-1")
+    spark.conf.set(key, bytes.toString)
     try body finally spark.conf.set(key, prev)
   }
+
+  /** `body` with broadcast joins disabled: `minLabel` then takes its
+    * star-contraction path whatever the graph's size. */
+  private def distributed[T](body: => T): T = withBroadcastThreshold(-1)(body)
 
   private def onBothPaths(body: => Unit): Unit = { body; distributed(body) }
 
   private def sorted(labels: DataFrame): Seq[(Long, Long)] =
     labels.orderBy("node").as[(Long, Long)].collect().toSeq
+
+  /** `body`'s result and the number of Spark jobs it submits. */
+  private def jobsIn[T](body: => T): (T, Int) = {
+    val group = "components-job-pin"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "minLabel job pin", interruptOnCancel = false)
+      val out = try body finally sc.clearJobGroup()
+      Listeners.drain(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 
   test("chain closes transitively: a~b, b~c -> one keeper, no a~c edge needed") {
     onBothPaths {
@@ -60,14 +83,12 @@ class ComponentsSpec extends SparkSpec {
     }
   }
 
-  test("iteration cap swaps to star contraction: path longer than the cap still resolves") {
-    // path 1-2-...-120 (diameter 119) with maxIters=10: propagation cannot
-    // finish, so the guard must hand off to large-star/small-star and
-    // still return the exact component minima (the driver path has no
-    // rounds to cap, so broadcast is off here)
+  test("a diameter-119 path resolves with broadcast off") {
+    // path 1-2-...-120: star contraction's rounds grow with log n, not
+    // with the diameter (broadcast is off, so the driver path is skipped)
     distributed {
       val edges = (1L until 120L).map(i => (i, i + 1)).toDF("a", "b")
-      val got = Components.minLabel(edges, "a", "b", maxIters = 10)
+      val got = Components.minLabel(edges, "a", "b")
         .as[(Long, Long)].collect().toMap
       assert(got.size == 120)
       (1L to 120L).foreach(n => assert(got(n) == 1L, s"node $n"))
@@ -126,25 +147,24 @@ class ComponentsSpec extends SparkSpec {
   }
 
   test("a 200-edge graph within the broadcast budget is labelled in at most 2 jobs") {
-    // the distributed loop submits ~20 jobs here (seed, fused pairs,
-    // label-sum reads, edge count); the driver path reads the edge
-    // checkpoint once
+    // star contraction submits several jobs per round (two checkpoints
+    // and a signature read); the driver path reads the edge checkpoint once
     val edges = (1L to 200L).map(i => (i, i % 37 + 1000L)).toDF("a", "b").localCheckpoint()
-    val group = "components-job-pin"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
+    val (_, jobs) = jobsIn(Components.minLabel(edges, "a", "b"))
+    assert(jobs >= 1 && jobs <= 2, s"$jobs jobs")
+  }
+
+  test("budget boundary at threshold / 32: 50 edges on the driver, 51 contracted") {
+    withBroadcastThreshold(32L * 50) {
+      for (n <- Seq(50L, 51L)) {
+        // stars over blocks of 7 consecutive ids, self-loops at the centres
+        val edges = (1L to n).map(i => (i, i / 7 * 7)).toDF("a", "b").localCheckpoint()
+        val (labels, jobs) = jobsIn(Components.minLabel(edges, "a", "b"))
+        if (n == 50L) assert(jobs <= 2, s"$n edges: $jobs jobs")
+        else assert(jobs > 2, s"$n edges took the driver path ($jobs jobs)")
+        assert(sorted(labels) == sorted(Components.starContract(edges, "a", "b")), s"$n edges")
+      }
     }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "minLabel job pin", interruptOnCancel = false)
-      try Components.minLabel(edges, "a", "b") finally sc.clearJobGroup()
-      Listeners.drain(sc)
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get >= 1 && jobs.get <= 2, s"${jobs.get} jobs")
   }
 
   test("quality keeper is idempotent and quality-dominates its cluster") {

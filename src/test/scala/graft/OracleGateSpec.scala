@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import scala.sys.process.{Process, ProcessLogger}
 import com.fasterxml.jackson.databind.ObjectMapper
 
-/** Query families against their DuckDB oracles, inside the unit suite:
+/** Every oracle key against its DuckDB oracle, inside the unit suite:
   * each query's output is dumped the way `graft.Verify` dumps it (one
   * parquet directory per key plus `oracle_sql.json`) and `tools/check.py`
   * compares it with the oracle SQL. Cancelled when python3 cannot import
@@ -34,16 +34,26 @@ class OracleGateSpec extends SparkSpec {
     } finally deleteTree(out)
   }
 
+  private val nearDupKeys = Seq(
+    "q_minhash", "q_neardup_lsh", "q_neardup_cosine", "q_simhash_neardup",
+    "q_incremental_neardup", "q_minhash_error", "q_dedup_clusters",
+    "q_dedup_clusters_star", "q_dedup_keeper_best", "q_split_leakage_safe",
+    "q_soft_dedup", "q_dup_matrix", "q_containment", "q_contain_prune")
+
+  private val featureMatrixKeys = Seq(
+    "q_feature_matrix", "q_feature_matrix_windowed", "q_feature_matrix_windowed_full")
+
   test("near-dup family matches its DuckDB oracles (tools/check.py ALL PASS)") {
-    checkAgainstOracles(Seq(
-      "q_minhash", "q_neardup_lsh", "q_neardup_cosine", "q_simhash_neardup",
-      "q_incremental_neardup", "q_minhash_error", "q_dedup_clusters",
-      "q_dedup_clusters_star", "q_dedup_keeper_best", "q_split_leakage_safe",
-      "q_soft_dedup", "q_dup_matrix", "q_containment", "q_contain_prune"))
+    checkAgainstOracles(nearDupKeys)
   }
 
   test("feature-matrix family matches its DuckDB oracles (tools/check.py ALL PASS)") {
-    checkAgainstOracles(Seq(
-      "q_feature_matrix", "q_feature_matrix_windowed", "q_feature_matrix_windowed_full"))
+    checkAgainstOracles(featureMatrixKeys)
+  }
+
+  test("every other oracle key matches its DuckDB oracle (tools/check.py ALL PASS)") {
+    val rest = SparkEntry.oracleSql.keys.toSeq.sorted.diff(nearDupKeys ++ featureMatrixKeys)
+    assert(rest.nonEmpty)
+    checkAgainstOracles(rest)
   }
 }
