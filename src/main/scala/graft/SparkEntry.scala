@@ -26,16 +26,21 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q_feature_matrix")(spark, "/root/testdata/sf0.001")
 
-  /** Flagship input layout: `Tables.turns` already leaves the frame
-    * hash-clustered on conv_id (its turn-numbering window introduced that
-    * exchange), which is exactly the distribution the native as-of merge
-    * needs on its fact side — adding a range layout on top would force
-    * EnsureRequirements to re-shuffle BOTH as-of children to hash (see
-    * [[graft.ops.Ordered.clusteredPartitions]]). So: pass through, zero
-    * extra exchanges.
+  /** Scale-adaptive scan spread (r7, guide §2/§6): heavy ROW-LOCAL work
+    * (per-token md5 for minhash/shingles/CDC) inherits the scan's
+    * partitioning, and a small corpus arrives as ONE file → ONE task
+    * doing all the hashing while the rest of the machine idles. When the
+    * scan landed on fewer partitions than the session's parallelism,
+    * spread rows round-robin first (a sub-MB exchange at fixture size);
+    * at production scale a corpus scan already yields ≥ parallelism
+    * splits and this is the identity — the width is derived from the
+    * input, never a constant. Only used ahead of order-insensitive
+    * aggregations (min/count/sum or verified-pair outputs).
     */
-  private def turnsOrdered(s: SparkSession, dir: String): DataFrame =
-    Tables.turns(s, dir)
+  private[graft] def spreadSmallScan(df: DataFrame): DataFrame = {
+    val p = df.sparkSession.sparkContext.defaultParallelism
+    if (df.rdd.getNumPartitions < p) df.repartition(p) else df
+  }
 
   /** Distinct-trigram array over a MATERIALIZED token-array attribute.
     * The attribute is load-bearing: higher-order lambdas run interpreted
@@ -56,22 +61,6 @@ object SparkEntry {
     * quadratic split-inlined expression back in — measured 9.0s vs 1.7s
     * for q_ngram_novelty at sf0.1, plan-pinned by PlanShapeSpec.
     */
-  /** Scale-adaptive scan spread (r7, guide §2/§6): heavy ROW-LOCAL work
-    * (per-token md5 for minhash/shingles/CDC) inherits the scan's
-    * partitioning, and a small corpus arrives as ONE file → ONE task
-    * doing all the hashing while the rest of the machine idles. When the
-    * scan landed on fewer partitions than the session's parallelism,
-    * spread rows round-robin first (a sub-MB exchange at fixture size);
-    * at production scale a corpus scan already yields ≥ parallelism
-    * splits and this is the identity — the width is derived from the
-    * input, never a constant. Only used ahead of order-insensitive
-    * aggregations (min/count/sum or verified-pair outputs).
-    */
-  private[graft] def spreadSmallScan(df: DataFrame): DataFrame = {
-    val p = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < p) df.repartition(p) else df
-  }
-
   private[graft] def trigramArr(a: Column): Column =
     when(size(a) >= 3,
       array_distinct(transform(sequence(lit(1), size(a) - 2),
@@ -538,11 +527,10 @@ object SparkEntry {
     // are dropped (they were already emitted by the cycle that ingested
     // them). Since da < db and "new" is an id suffix, at-least-one-new ⟺
     // db ≥ threshold — the same rule the oracle twin applies to the full
-    // pair pipeline. In production the is_new=false signature rows are READ
-    // from [[graft.features.SignatureStore]] (IncrementalSpec drives that
-    // path end-to-end: two upsert cycles, store ≡ direct signatures, cycle
-    // pairs ≡ this query); here both sides are computed so the DuckDB twin
-    // can reproduce the table from the same parquet.
+    // pair pipeline. A deployment that persists signatures would READ the
+    // is_new=false rows instead of recomputing them; here both sides are
+    // computed so the DuckDB twin can reproduce the table from the same
+    // parquet.
     "q_incremental_neardup" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       val thr = docs.agg(
@@ -2143,7 +2131,7 @@ object SparkEntry {
     // pair (shape pinned by PlanShapeSpec).
     "q_feature_matrix" -> ((s, dir) =>
       graft.features.FeatureRegistry.featureMatrix(
-          turnsOrdered(s, dir), Some(Tables.state(s, dir)))
+          Tables.turns(s, dir), Some(Tables.state(s, dir)))
         .orderBy("conv_id")),
 
     // ——— F5 string repeat/casing + F11/F12 padding & position arithmetic
@@ -2723,10 +2711,8 @@ object SparkEntry {
   private final val MinHashK = 8
 
   /** Per-(doc, band) LSH signature rows `(doc_id, band, bkey, source)` —
-    * the banding stage of [[neardupLshPairs]], factored so the incremental
-    * path can compute it for a NEW SLICE only and persist it
-    * ([[graft.features.SignatureStore]], VERDICT r5 #7). One row per
-    * doc_id in `docs`.
+    * the banding stage of [[neardupLshPairs]], shared with
+    * `q_incremental_neardup`. One row per doc_id in `docs`.
     */
   private[graft] def lshBandSigs(docs: DataFrame): DataFrame = {
     // Row-local after the spread: the MinHashExpr kernel signs each doc
@@ -2757,8 +2743,8 @@ object SparkEntry {
     * jaccard ≥ 0.9; both sides' token sets come from one documents scan
     * ([[graft.ops.NearDup.resolvePairs]]).
     */
-  private[graft] def lshVerify(docs: DataFrame, cand: DataFrame,
-                               carryCols: Seq[String] = Nil): DataFrame =
+  private def lshVerify(docs: DataFrame, cand: DataFrame,
+                        carryCols: Seq[String] = Nil): DataFrame =
     NearDup.resolvePairs(docs, cand, "doc_id", tokenSet, ("sa", "sb"), carry = carryCols)
       .withColumn("i", size(array_intersect(col("sa"), col("sb"))))
       .withColumn("jaccard", col("i").cast("double") / (size(col("sa")) + size(col("sb")) - col("i")))
@@ -2771,10 +2757,6 @@ object SparkEntry {
     */
   private def tokenSet: Column = array_distinct(split(col("text"), " "))
 
-  /** Oracle twin of [[neardupLshPairs]]: the CTE chain up to `ver`
-    * (candidate pairs + exact-Jaccard verify), shared by the q_neardup_lsh
-    * and q_dedup_clusters oracles so the pair definition cannot desync.
-    */
   /** Oracle twin of [[graft.ops.DupSpans.spans]] (k = 5): the CTE chain up
     * to `spn` (per-doc maximal duplicated spans, 0-based inclusive s/e),
     * shared by the q_dup_spans and q_dup_spans_cut oracles so the shingle
@@ -2890,6 +2872,10 @@ object SparkEntry {
       |  JOIN sz sa ON sa.doc_id = i.da
       |  JOIN sz sb ON sb.doc_id = i.db)""".stripMargin
 
+  /** Oracle twin of [[neardupLshPairs]]: the CTE chain up to `ver`
+    * (candidate pairs + exact-Jaccard verify), shared by the q_neardup_lsh
+    * and q_dedup_clusters oracles so the pair definition cannot desync.
+    */
   private val neardupPairsCtes: String =
     """toks AS (
       |  SELECT DISTINCT doc_id, tok FROM (

@@ -24,12 +24,12 @@ import graft.ops.LagLead
   * counts, conditional counts, min/max, first/last timestamps, raw power
   * sums S1..S4 of text length (exact BIGINTs: len ≤ ~10³ keeps len⁴·rows
   * far under 2⁶³ for any realistic conversation), and the slice's
-  * gap-session count with its boundary timestamps so sessions stitch
-  * across slices the way the streaming sessionizer carries state across
-  * micro-batches. Moments come out of the power sums at [[finalize]] with
-  * the same *, /, sqrt op sequence as [[graft.functions.Stats]]'s Pow
-  * forms — on exact integer sums the formula is the same IEEE sequence in
-  * any engine, so the DuckDB oracle matches bit-for-bit.
+  * gap-session count with its boundary timestamps so a session open at
+  * one slice's end stitches into the next slice's first. Moments come
+  * out of the power sums at [[finalize]] with the same *, /, sqrt op
+  * sequence as [[graft.functions.Stats]]'s Pow forms — on exact integer
+  * sums the formula is the same IEEE sequence in any engine, so the
+  * DuckDB oracle matches bit-for-bit.
   *
   * CONTRACT: [[merge]](a, b) requires the two slices to be time-disjoint
   * per conversation with every b-turn at-or-after every a-turn (the
@@ -307,28 +307,8 @@ object Incremental {
   }
 }
 
-/** Durable generation store for [[Incremental]] partials — the sandbox
-  * analog of `MERGE INTO feature_store USING new_slice` on an Iceberg
-  * table (same honest-substitute contract as [[graft.checkpoint.Snapshot]]:
-  * parquet data + a tiny pointer file standing in for the catalog's
-  * current-snapshot pointer; a real Iceberg binding swaps the write path
-  * one-for-one).
-  *
-  * Layout: `dir/gen-K/` parquet partials per upsert cycle, `dir/_CURRENT`
-  * holding K plus the merged slice's fingerprint. Each upsert reads gen K,
-  * merges the new slice's partials, writes gen K+1, then flips the pointer
-  * with an atomic rename — a crash mid-cycle leaves an orphan gen-K+1
-  * directory and an intact pointer (the store is never observed
-  * half-written), and a re-run after a SUCCESSFUL flip is caught by the
-  * recorded slice fingerprint and no-ops instead of double-merging — so
-  * the cycle is safely re-runnable on either side of the flip (the same
-  * end-to-end re-run contract as Snapshot's shard manifest). Generations
-  * older than the previous one are dropped after the flip.
-  */
-/** Shared generation-store mechanics for [[IncrementalStore]] and
-  * [[SignatureStore]]: the `gen-K/` parquet + atomic `_CURRENT` pointer +
-  * slice-fingerprint no-op protocol, factored so the two stores cannot
-  * drift on crash/replay semantics.
+/** Generation-store mechanics behind [[IncrementalStore]]: the `gen-K/`
+  * parquet + atomic `_CURRENT` pointer + slice-fingerprint no-op protocol.
   */
 private[features] object GenStore {
   import java.nio.file.{Files, Paths, StandardCopyOption}
@@ -380,6 +360,24 @@ private[features] object GenStore {
   }
 }
 
+/** Durable generation store for [[Incremental]] partials — the sandbox
+  * analog of `MERGE INTO feature_store USING new_slice` on an Iceberg
+  * table (same honest-substitute contract as [[graft.checkpoint.Snapshot]]:
+  * parquet data + a tiny pointer file standing in for the catalog's
+  * current-snapshot pointer; a real Iceberg binding swaps the write path
+  * one-for-one).
+  *
+  * Layout: `dir/gen-K/` parquet partials per upsert cycle, `dir/_CURRENT`
+  * holding K plus the merged slice's fingerprint. Each upsert reads gen K,
+  * merges the new slice's partials, writes gen K+1, then flips the pointer
+  * with an atomic rename — a crash mid-cycle leaves an orphan gen-K+1
+  * directory and an intact pointer (the store is never observed
+  * half-written), and a re-run after a SUCCESSFUL flip is caught by the
+  * recorded slice fingerprint and no-ops instead of double-merging — so
+  * the cycle is safely re-runnable on either side of the flip (the same
+  * end-to-end re-run contract as Snapshot's shard manifest). Generations
+  * older than the previous one are dropped after the flip.
+  */
 object IncrementalStore {
   import java.nio.file.{Files, Paths}
   import org.apache.spark.sql.SparkSession
@@ -397,7 +395,7 @@ object IncrementalStore {
     * cycle whose partials are byte-identical to the previous one
     * (plausible for synthetic or repeating feeds) is indistinguishable
     * from a replay and is dropped. Callers that HAVE an external cycle
-    * identity (foreachBatch's batchId, a scheduler run id) should pass it
+    * identity (a scheduler run id, a stream's batch id) should pass it
     * as `epochId`: it is mixed into the recorded id, so a replay of the
     * SAME epoch stays a detected no-op while an identical-content NEW
     * epoch merges. Callers without one accept the content-only semantics.
@@ -454,70 +452,4 @@ object IncrementalStore {
         s"store at $dir has a single generation (gen-$g) — drift needs two")
       case None => throw new IllegalStateException(s"no generations in $dir")
     }
-}
-
-/** Durable per-document LSH signature store — the near-dup companion of
-  * [[IncrementalStore]] (VERDICT r5 #7: "the last full-recompute in the
-  * curation stack"). Rows are `SparkEntry.lshBandSigs` output
-  * `(doc_id, band, bkey, source)`: IMMUTABLE per document, so the merge is
-  * an append (union + per-(doc, band) dedup guards a re-sent doc) and an
-  * upsert cycle costs O(new slice) signature computation — old documents
-  * are never re-tokenized. The incremental near-dup cycle band-joins the
-  * new slice's signatures against this table (`q_incremental_neardup` pins
-  * the join shape against the DuckDB twin; IncrementalSpec drives the
-  * store path end-to-end: two cycles ≡ direct signatures, replay no-op).
-  *
-  * Same crash/replay contract as IncrementalStore (shared [[GenStore]]):
-  * atomic pointer flip, fingerprint no-op on re-run, current+previous
-  * retention. At 100 TB the gen rewrite becomes an Iceberg partition
-  * append — signatures are append-only, so no generation merge logic is
-  * ever needed beyond the dedup guard.
-  */
-object SignatureStore {
-  import org.apache.spark.sql.SparkSession
-  import GenStore.{currentGen, sliceId}
-
-  /** Append one slice's signature rows; returns the new stored table.
-    * Replay-safe twice over: the fingerprint no-op catches an identical
-    * re-run (mix `epochId` in when the caller has one — same caveat as
-    * IncrementalStore.upsert), and the per-(doc_id, band) dedup makes even
-    * a forced double-merge idempotent on content.
-    */
-  def upsert(spark: SparkSession, dir: String, newSigs: DataFrame,
-             epochId: Option[Long] = None): DataFrame = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    val sliceP = newSigs.localCheckpoint()
-    val sid = epochId.fold(sliceId(sliceP))(e => s"e$e-${sliceId(sliceP)}")
-    val cur = currentGen(dir)
-    cur match {
-      case Some((g, Some(prevSid))) if prevSid == sid =>
-        System.err.println(s"[sigstore] slice $sid already merged as gen-$g — no-op re-run")
-        return spark.read.parquet(s"$dir/gen-$g")
-      case _ => ()
-    }
-    val merged = cur match {
-      case Some((g, _)) => spark.read.parquet(s"$dir/gen-$g")
-        .unionByName(sliceP).dropDuplicates("doc_id", "band")
-      case None => sliceP
-    }
-    val next = cur.map(_._1 + 1).getOrElse(0)
-    GenStore.commit(dir, merged, next, sid)
-    spark.read.parquet(s"$dir/gen-$next")
-  }
-
-  /** Current stored signature table. */
-  def sigs(spark: SparkSession, dir: String): DataFrame =
-    currentGen(dir) match {
-      case Some((g, _)) => spark.read.parquet(s"$dir/gen-$g")
-      case None => throw new IllegalStateException(s"no generations in $dir")
-    }
-
-  /** `None` ONLY when the store has no generation yet (first cycle); a
-    * malformed pointer or unreadable generation still throws — callers
-    * must not mistake a broken store for an empty one (silently treating
-    * a populated store as empty would drop every old↔new duplicate pair
-    * of the cycle, permanently once the upsert lands).
-    */
-  def sigsIfAny(spark: SparkSession, dir: String): Option[DataFrame] =
-    currentGen(dir).map { case (g, _) => spark.read.parquet(s"$dir/gen-$g") }
 }

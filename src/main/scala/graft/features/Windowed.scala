@@ -57,11 +57,7 @@ object Windowed {
   def featureMatrixWindowedFull(turns: DataFrame, state: Option[DataFrame],
                                 windowSize: Int = 8, overlap: Int = 2,
                                 modules: Seq[FeatureModule] =
-                                  FeatureRegistry.all.map {
-                                    // power-sum moment forms for small windows
-                                    case TextStatsModule => TextStatsWindowModule
-                                    case m               => m
-                                  }): DataFrame = {
+                                  FeatureRegistry.modulesFor(Nil, windowed = true)): DataFrame = {
     val ordered = FeatureRegistry.toposort(modules)
     val slim =
       if (turns.columns.contains("text"))

@@ -33,15 +33,6 @@ object VectorFns {
   def norm2Hof(a: Column): Column =
     sqrt(aggregate(toDouble(a), lit(0.0), (acc, x) => acc + x * x))
 
-  /** Coarse LSH/IVF-style bucket from the signs of the first 4 dimensions
-    * (0..15) — the toy axis-aligned form kept as a reference baseline;
-    * the scale path is [[signPlanes]] (16 RANDOM hyperplanes, banded).
-    */
-  def signBucket4(v: Column): Column = {
-    def bit(i: Int) = when(element_at(v, i + 1) > 0.0f, 1).otherwise(0)
-    (bit(0) * 8 + bit(1) * 4 + bit(2) * 2 + bit(3)).cast("int")
-  }
-
   /** Deterministic pseudo-random hyperplane weight for (plane p, 1-based
     * dim d): integer in [-1000, 1000] from the shared engine-portable
     * md5-60-bit primitive, so the DuckDB oracle reproduces the planes as

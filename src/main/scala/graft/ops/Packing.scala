@@ -40,26 +40,26 @@ object Packing {
   /** Open bin/block bookkeeping: id 0 = nothing open yet. */
   case class Carry(id: Int, fill: Long)
 
-  /** THE greedy recurrence, written once — the batch packers, the
-    * streaming packer, and the DuckDB oracle twins all encode exactly
-    * this step: open a new bin when nothing is open or the item would
-    * overflow, else add to the open bin. An oversized item opens its own
-    * bin (truncation is the trainer's decision, not the packer's).
+  /** THE greedy recurrence, written once — both packers and the DuckDB
+    * oracle twins encode exactly this step: open a new bin when nothing
+    * is open or the item would overflow, else add to the open bin. An
+    * oversized item opens its own bin (truncation is the trainer's
+    * decision, not the packer's).
     */
   def advance(c: Carry, tok: Long, capacity: Long): Carry =
     if (c.id == 0 || c.fill + tok > capacity) Carry(c.id + 1, tok)
     else Carry(c.id, c.fill + tok)
 
-  /** Whitespace token count of `text`, shared by every packer so the
-    * stream-equals-batch contract can't drift on tokenization. Exact
-    * semantics (parity-pinned with DuckDB's `string_split`): null → 0,
-    * empty or whitespace-only text → its split length (`""` counts 1 —
-    * the split yields one empty token on both engines).
+  /** Whitespace token count of `text`, shared by both packers so they
+    * cannot drift on tokenization. Exact semantics (parity-pinned with
+    * DuckDB's `string_split`): null → 0, empty or whitespace-only text →
+    * its split length (`""` counts 1 — the split yields one empty token
+    * on both engines).
     */
   def tokCount(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     coalesce(size(split(text, " ")).cast("long"), lit(0L))
 
-  /** The (conv_id, turn_idx, tok_cnt) projection both turn packers read. */
+  /** The (conv_id, turn_idx, tok_cnt) projection [[packTurns]] reads. */
   def turnToks(turns: DataFrame): Dataset[TurnTok] = {
     val spark = turns.sparkSession
     import spark.implicits._

@@ -52,15 +52,6 @@ object Ordered {
     val sp = org.apache.spark.sql.graft.Bridge.sqlConf(df.sparkSession).numShufflePartitions
     df.repartition(sp, col(key))
   }
-
-  /** Salt helper for skewed heavy aggregates: adds `salt = hash-block` so a
-    * single giant conversation splits across `blocks` tasks; callers do a
-    * two-phase aggregate (partial per (key, salt), final per key).
-    * Window functions cannot be salted — for those, see the block-local
-    * scan + boundary-carry technique (SURVEY.md §7.4#2); aggregates can.
-    */
-  def withSalt(df: DataFrame, ord: String, blockRows: Int): DataFrame =
-    df.withColumn("salt", (col(ord).cast("long") / blockRows).cast("int"))
 }
 
 /** Lag/lead turn features (SURVEY.md W1/W10; musiF interval extraction,
@@ -95,8 +86,7 @@ object LagLead {
 
 /** Gap sessionization (SURVEY.md W9): a new session starts when the gap to
   * the previous turn exceeds `gapSeconds`. Batch form of
-  * `session_window($"ts", gap)`; the streaming port reuses the same logic
-  * (graft.streaming). Pattern mirrors musiF's key-area change-point
+  * `session_window($"ts", gap)`. Pattern mirrors musiF's key-area change-point
   * segmentation (musif/extract/features/harmony/utils.py:207-271).
   */
 object Sessionize {

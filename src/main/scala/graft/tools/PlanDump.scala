@@ -4,7 +4,9 @@
 // under the SAME session shape the bench harness times (local[$SPARK_GRAFT_CPUS],
 // shuffle.partitions = cpus, AQE on), so the committed plans match what the
 // driver's bench actually executes (modulo AQE's runtime re-optimization,
-// which explain() cannot show before execution).
+// which explain() cannot show before execution). One query's plan:
+//   sbt "runMain graft.tools.PlanDump /tmp/plans now q_feature_matrix <sfDir>"
+// writes /tmp/plans/q_feature_matrix_now.txt.
 package graft.tools
 
 import java.nio.file.{Files, Paths}

@@ -270,54 +270,26 @@ class IncrementalSpec extends SparkSpec {
     assert(dt.getString(0) == "tool_hist" && dt.getLong(1) >= 1L)
   }
 
-  test("SignatureStore: two upsert cycles equal direct signatures; cycle pairs equal the registry query") {
-    val dir = "/root/testdata/sf0.001"
-    val docs = Tables.documents(spark, dir)
-    val thr = docs.agg(floor(lit(0.8) * (max(col("doc_id")) + lit(1L))))
-      .head.getLong(0)
-    val stored = docs.filter(col("doc_id") < thr)
-    val fresh = docs.filter(col("doc_id") >= thr)
-    val store = Files.createTempDirectory("sig_store").toString
-    // cycle 1 ingests the historical corpus; cycle 2 computes signatures
-    // for the NEW SLICE ONLY (the incremental claim: old docs are never
-    // re-tokenized — SparkEntry.lshBandSigs(fresh) touches fresh alone)
-    graft.features.SignatureStore.upsert(spark, store,
-      SparkEntry.lshBandSigs(stored), epochId = Some(1L))
-    graft.features.SignatureStore.upsert(spark, store,
-      SparkEntry.lshBandSigs(fresh), epochId = Some(2L))
-    def rows(df: DataFrame) = df.orderBy("doc_id", "band")
-      .collect().map(_.toString).toSeq
-    val direct = SparkEntry.lshBandSigs(docs)
-    assert(rows(graft.features.SignatureStore.sigs(spark, store)) == rows(direct),
-      "stored signatures after two cycles must equal the direct corpus-wide signatures")
-    // replaying cycle 2 (same epoch) is a detected no-op
-    val gens = new java.io.File(store).list().filter(_.startsWith("gen-")).sorted.toSeq
-    graft.features.SignatureStore.upsert(spark, store,
-      SparkEntry.lshBandSigs(fresh), epochId = Some(2L))
-    val gens2 = new java.io.File(store).list().filter(_.startsWith("gen-")).sorted.toSeq
-    assert(gens2 == gens, s"replay advanced the store: $gens2")
-    // the incremental cycle's pair output: new-slice signatures band-joined
-    // against the STORED table (bucket-group over the union, buckets with
-    // no new member pruned, old-old pairs dropped) — must equal the
-    // q_incremental_neardup registry result, which computes both sides
-    val all = graft.features.SignatureStore.sigs(spark, store)
-      .withColumn("is_new", col("doc_id") >= thr)
-    val buckets = all.groupBy("source", "band", "bkey")
-      .agg(collect_list(struct(col("doc_id"), col("is_new"))).as("ds"))
-      .filter(size(col("ds")) > 1 && exists(col("ds"), d => d.getField("is_new")))
-    val cand = buckets
-      .select(explode(col("ds")).as("a"), col("ds"))
-      .select(col("a"), explode(filter(col("ds"),
-        d => d.getField("doc_id") > col("a.doc_id"))).as("b"))
-      .filter(col("b.is_new"))
-      .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
-      .distinct()
-    val cyclePairs = SparkEntry.lshVerify(docs, cand)
-      .withColumn("new_new", (col("da") >= thr).cast("long"))
-    val registry = SparkEntry.queries("q_incremental_neardup")(spark, dir)
-    def pairRows(df: DataFrame) = df.orderBy("da", "db")
-      .collect().map(_.toString).toSeq
-    assert(pairRows(cyclePairs) == pairRows(registry),
-      "store-driven incremental cycle must emit exactly the registry query's pairs")
+  test("store: a replayed epoch is a no-op, identical content under a new epoch merges") {
+    val t = fixture
+    val dir = Files.createTempDirectory("epoch_store").toString
+    val s1 = t.filter(col("turn_idx") < 3)
+    val s2 = t.filter(col("turn_idx") >= 3)
+    def gens = new java.io.File(dir).list().filter(_.startsWith("gen-")).sorted.toSeq
+    graft.features.IncrementalStore.upsert(spark, dir, s1, epochId = Some(0L))
+    graft.features.IncrementalStore.upsert(spark, dir, s2, epochId = Some(1L))
+    val before = gens
+    // at-least-once redelivery of the last cycle carries the SAME epoch:
+    // the epoch-mixed slice fingerprint makes it a detected no-op
+    graft.features.IncrementalStore.upsert(spark, dir, s2, epochId = Some(1L))
+    assert(gens == before, s"replayed epoch advanced the store: $before -> $gens")
+    // the SAME content under a NEW epoch is a genuinely new cycle: it is
+    // merged, not dropped as a replay, so the store advances a generation
+    graft.features.IncrementalStore.upsert(spark, dir, s2, epochId = Some(2L))
+    assert(gens != before, "identical-content new epoch was dropped as a replay")
+    // previous-vs-current PSI reads off the two retained generations
+    val dr = graft.features.IncrementalStore.drift(spark, dir).collect().head
+    assert(dr.getString(0) == "gap_hist" && !dr.isNullAt(2),
+      s"store drift must produce a concrete PSI row, got $dr")
   }
 }

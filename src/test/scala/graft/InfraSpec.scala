@@ -2,15 +2,10 @@ package graft
 
 import graft.checkpoint.Snapshot
 import graft.datagen.TranscriptGen
-import graft.sources.Multimodal
-import graft.streaming.StreamFeatures
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
-/** Datagen determinism, checkpoint resume, streaming sessionize, and the
-  * multimodal batch plumbing.
-  */
+/** Bench outlier rejection, datagen determinism and checkpoint resume. */
 class InfraSpec extends SparkSpec {
   import spark.implicits._
 
@@ -75,323 +70,5 @@ class InfraSpec extends SparkSpec {
     val lin = Snapshot.lineage(spark, out).collect()
     assert(lin.length == 4)
     assert(lin.forall(r => r.getAs[Long]("rows") > 0 && r.getAs[Long]("wallMs") >= 0))
-  }
-
-  test("streaming sessionize: gap splits sessions (MemoryStream)") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(String, Int, String, String, String, java.sql.Timestamp)]
-    val df = mem.toDF().toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
-    val q = StreamFeatures.sessionStats(df, gap = "1 minute", watermark = "0 seconds")
-      .writeStream.format("memory").queryName("sess_out").outputMode("complete").start()
-    mem.addData(
-      ("a", 0, "user", "hi", null, ts("2024-01-01 00:00:00")),
-      ("a", 1, "assistant", "yo", null, ts("2024-01-01 00:00:30")),
-      ("a", 2, "user", "later", null, ts("2024-01-01 00:10:00")))
-    q.processAllAvailable()
-    val rows = spark.sql("SELECT conv_id, n_turns FROM sess_out ORDER BY session_start")
-      .as[(String, Long)].collect().toSeq
-    q.stop()
-    assert(rows == Seq(("a", 2L), ("a", 1L)))
-  }
-
-  test("streaming as-of: state carries across micro-batches, ties state-first") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(String, Long, Boolean, Option[Int], Option[String])]
-    val events = mem.toDF()
-      .toDF("conv_id", "ts_us", "is_state", "turn_idx", "state_val")
-      .as[StreamFeatures.AsOfEvent]
-    val q = StreamFeatures.asOfState(events)
-      .writeStream.format("memory").queryName("asof_out").outputMode("append").start()
-    // batch 1: state s0@10, turn@10 (tie → sees s0), turn@5 (before any state)
-    mem.addData(
-      ("a", 5L, false, Some(0), None),
-      ("a", 10L, true, None, Some("s0")),
-      ("a", 10L, false, Some(1), None))
-    q.processAllAvailable()
-    // batch 2: a turn in a LATER micro-batch still sees batch-1 state
-    mem.addData(
-      ("a", 20L, false, Some(2), None),
-      ("a", 30L, true, None, Some("s1")),
-      ("a", 40L, false, Some(3), None))
-    q.processAllAvailable()
-    val got = spark.sql("SELECT turn_idx, state_val FROM asof_out ORDER BY turn_idx")
-      .as[(Int, Option[String])].collect().toSeq
-    q.stop()
-    assert(got == Seq(
-      (0, None), (1, Some("s0")),          // batch 1: no-state-yet, same-ts tie
-      (2, Some("s0")), (3, Some("s1"))))   // batch 2: carried + updated state
-
-    // batch-equivalence on the same data
-    val turns = Seq(("a", 0, 5L), ("a", 1, 10L), ("a", 2, 20L), ("a", 3, 40L))
-      .toDF("conv_id", "turn_idx", "us")
-      .withColumn("ts", timestamp_micros(col("us"))).drop("us")
-    val state = Seq(("a", 10L, "s0"), ("a", 30L, "s1"))
-      .toDF("conv_id", "us", "state_val")
-      .withColumn("ts", timestamp_micros(col("us"))).drop("us")
-    val batch = graft.ops.AsOf.join(turns, state, "conv_id", "ts", Seq("state_val"))
-      .orderBy("turn_idx").select("turn_idx", "state_val")
-      .as[(Int, Option[String])].collect().toSeq
-    assert(batch == got)
-  }
-
-  test("streaming as-of: strict mode never leaks same-ts state, matches batch") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(String, Long, Boolean, Option[Int], Option[String])]
-    val events = mem.toDF()
-      .toDF("conv_id", "ts_us", "is_state", "turn_idx", "state_val")
-      .as[StreamFeatures.AsOfEvent]
-    val q = StreamFeatures.asOfState(events, strict = true)
-      .writeStream.format("memory").queryName("asof_strict_out").outputMode("append").start()
-    // batch 1: same-ts state+turn in ONE batch (tie → invisible under strict),
-    // plus conv b's state that a later-batch same-ts turn must not see
-    mem.addData(
-      ("a", 10L, true, None, Some("s0")),
-      ("a", 10L, false, Some(0), None),
-      ("a", 20L, false, Some(1), None),
-      ("b", 50L, true, None, Some("s9")))
-    q.processAllAvailable()
-    // batch 2: same-ts state+turn again (turn sees only the CARRIED s0),
-    // and conv b's same-ts turn arriving a batch after its state
-    mem.addData(
-      ("a", 20L, true, None, Some("s1")),
-      ("a", 20L, false, Some(2), None),
-      ("a", 30L, false, Some(3), None),
-      ("b", 50L, false, Some(0), None))
-    q.processAllAvailable()
-    val got = spark.sql(
-      "SELECT conv_id, turn_idx, state_val FROM asof_strict_out ORDER BY conv_id, turn_idx")
-      .as[(String, Int, Option[String])].collect().toSeq
-    q.stop()
-    assert(got == Seq(
-      ("a", 0, None), ("a", 1, Some("s0")),        // tie invisible; strictly-before visible
-      ("a", 2, Some("s0")), ("a", 3, Some("s1")),  // same-ts batch-2 state invisible to its turn
-      ("b", 0, None)))                             // cross-batch same-ts must not leak either
-
-    // batch-equivalence under StrictlyBefore on the same data
-    val turns = Seq(("a", 0, 10L), ("a", 1, 20L), ("a", 2, 20L), ("a", 3, 30L), ("b", 0, 50L))
-      .toDF("conv_id", "turn_idx", "us")
-      .withColumn("ts", timestamp_micros(col("us"))).drop("us")
-    val state = Seq(("a", 10L, "s0"), ("a", 20L, "s1"), ("b", 50L, "s9"))
-      .toDF("conv_id", "us", "state_val")
-      .withColumn("ts", timestamp_micros(col("us"))).drop("us")
-    val batch = graft.ops.AsOf.join(turns, state, "conv_id", "ts", Seq("state_val"),
-        graft.ops.AsOf.StrictlyBefore)
-      .orderBy("conv_id", "turn_idx").select("conv_id", "turn_idx", "state_val")
-      .as[(String, Int, Option[String])].collect().toSeq
-    assert(batch == got)
-  }
-
-  test("streaming as-of: stateTtl plumbs a processing-time timeout into the plan") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(String, Long, Boolean, Option[Int], Option[String])]
-    val events = mem.toDF()
-      .toDF("conv_id", "ts_us", "is_state", "turn_idx", "state_val")
-      .as[StreamFeatures.AsOfEvent]
-    // plan-level only, deliberately not started: with ProcessingTimeTimeout
-    // armed and the default 0s trigger, the engine runs CONTINUOUS empty
-    // micro-batches to poll timeouts — a started query spins the suite's
-    // wall clock (observed: ~3000 epochs/min). The timeout semantics
-    // themselves (evict on quiet) are the engine's contract; ours is the
-    // plumbing: TTL set → ProcessingTimeTimeout, unset → NoTimeout.
-    val withTtl = StreamFeatures.asOfState(events, stateTtl = Some("1 hour"))
-    assert(withTtl.queryExecution.analyzed.toString.contains("ProcessingTimeTimeout"))
-    val noTtl = StreamFeatures.asOfState(events)
-    assert(noTtl.queryExecution.analyzed.toString.contains("NoTimeout"))
-  }
-
-  test("streaming as-of: tolerance bounds staleness from the matched row") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(String, Long, Boolean, Option[Int], Option[String])]
-    val events = mem.toDF()
-      .toDF("conv_id", "ts_us", "is_state", "turn_idx", "state_val")
-      .as[StreamFeatures.AsOfEvent]
-    val q = StreamFeatures.asOfState(events, toleranceUs = Some(15L))
-      .writeStream.format("memory").queryName("asof_tol_out").outputMode("append").start()
-    mem.addData(
-      ("a", 10L, true, None, Some("s0")),
-      ("a", 20L, false, Some(0), None))  // staleness 10 ≤ 15 → s0
-    q.processAllAvailable()
-    mem.addData(
-      ("a", 30L, false, Some(1), None))  // staleness 20 > 15 → expired
-    q.processAllAvailable()
-    val got = spark.sql("SELECT turn_idx, state_val FROM asof_tol_out ORDER BY turn_idx")
-      .as[(Int, Option[String])].collect().toSeq
-    q.stop()
-    assert(got == Seq((0, Some("s0")), (1, None)))
-
-    val turns = Seq(("a", 0, 20L), ("a", 1, 30L))
-      .toDF("conv_id", "turn_idx", "us")
-      .withColumn("ts", timestamp_micros(col("us"))).drop("us")
-    val state = Seq(("a", 10L, "s0"))
-      .toDF("conv_id", "us", "state_val")
-      .withColumn("ts", timestamp_micros(col("us"))).drop("us")
-    val batch = graft.ops.AsOf.join(turns, state, "conv_id", "ts", Seq("state_val"),
-        graft.ops.AsOf.AtOrBefore, toleranceUs = Some(15L))
-      .orderBy("turn_idx").select("turn_idx", "state_val")
-      .as[(Int, Option[String])].collect().toSeq
-    assert(batch == got)
-  }
-
-  test("streaming dedup: first doc per fingerprint wins across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, String, java.sql.Timestamp)]
-    val df = mem.toDF().toDF("doc_id", "text", "ts")
-    val q = StreamFeatures.dedupExact(df, watermark = "1 hour")
-      .writeStream.format("memory").queryName("dedup_out").outputMode("append").start()
-    // batch 1: two distinct docs + one in-batch exact copy
-    mem.addData((1L, "alpha beta", ts("2024-01-01 00:00:00")),
-      (2L, "gamma", ts("2024-01-01 00:00:10")),
-      (3L, "alpha beta", ts("2024-01-01 00:00:20")))
-    q.processAllAvailable()
-    // batch 2: a cross-batch copy (inside the watermark bound — must drop)
-    // and a genuinely new doc
-    mem.addData((4L, "gamma", ts("2024-01-01 00:30:00")),
-      (5L, "delta", ts("2024-01-01 00:30:05")))
-    q.processAllAvailable()
-    val kept = spark.sql("SELECT doc_id FROM dedup_out ORDER BY doc_id")
-      .as[Long].collect().toSeq
-    q.stop()
-    assert(kept == Seq(1L, 2L, 5L),
-      s"expected first-wins keepers 1,2,5 — got $kept")
-  }
-
-  test("streaming turn packing: blocks split across micro-batches equal the batch operator") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(String, Int, String)]
-    val df = mem.toDF().toDF("conv_id", "turn_idx", "text")
-    val q = StreamFeatures.packTurns(df, capacity = 7)
-      .writeStream.format("memory").queryName("pack_out").outputMode("append").start()
-    // batch 1 ends mid-block (3+3=6 of 7); batch 2's first turn must
-    // overflow THAT carried block, not start fresh
-    mem.addData(("c", 0, "a b c"), ("c", 1, "d e f"))
-    q.processAllAvailable()
-    mem.addData(("c", 2, "g h i"), ("c", 3, "j k"), ("d", 0, "x y z"))
-    q.processAllAvailable()
-    val got = spark.sql("SELECT conv_id, turn_idx, block FROM pack_out ORDER BY conv_id, turn_idx")
-      .as[(String, Int, Int)].collect().toSeq
-    q.stop()
-    val batch = graft.ops.Packing.packTurns(
-      Seq(("c", 0, "a b c"), ("c", 1, "d e f"), ("c", 2, "g h i"),
-        ("c", 3, "j k"), ("d", 0, "x y z")).toDF("conv_id", "turn_idx", "text"),
-      capacity = 7)
-      .orderBy("conv_id", "turn_idx")
-      .collect().map(b => (b.conv_id, b.turn_idx, b.block)).toSeq
-    assert(got == batch, s"stream $got != batch $batch")
-  }
-
-  test("streaming turn packing: stateTtl plumbs a processing-time timeout into the plan") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(String, Int, String)]
-    val df = mem.toDF().toDF("conv_id", "turn_idx", "text")
-    // plan-level only (same rationale as the as-of TTL test above)
-    val withTtl = StreamFeatures.packTurns(df, 7, stateTtl = Some("1 hour"))
-    assert(withTtl.queryExecution.analyzed.toString.contains("ProcessingTimeTimeout"))
-    val noTtl = StreamFeatures.packTurns(df, 7)
-    assert(noTtl.queryExecution.analyzed.toString.contains("NoTimeout"))
-  }
-
-  test("streaming incremental upsert: micro-batches maintain the store exactly, replay no-ops") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(String, Int, String, String, Option[String], java.sql.Timestamp)]
-    val df = mem.toDF().toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
-    val storeDir = Files.createTempDirectory("inc_stream_store").toString
-    val ckpt = Files.createTempDirectory("inc_stream_ckpt").toString
-    val q = StreamFeatures.incrementalUpsert(df, storeDir, ckpt)
-    // two append-only slices of one conversation + a conv seen only late
-    val b1 = Seq(
-      ("a", 0, "user", "hello world", None: Option[String], ts("2024-01-01 00:00:00")),
-      ("a", 1, "assistant", "hi there", Some("tool_1"), ts("2024-01-01 01:00:00")))
-    val b2 = Seq(
-      ("a", 2, "user", "more text", Some("tool_1"), ts("2024-01-01 02:00:00")),
-      ("b", 0, "user", "late conv", None: Option[String], ts("2024-01-01 03:00:00")))
-    mem.addData(b1: _*)
-    q.processAllAvailable()
-    mem.addData(b2: _*)
-    q.processAllAvailable()
-    q.stop()
-    val all = (b1 ++ b2).toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
-    val got = graft.features.IncrementalStore.features(spark, storeDir)
-      .orderBy("conv_id").collect().map(_.toString).toSeq
-    val direct = graft.features.Incremental.finalize(
-      graft.features.Incremental.partials(all))
-      .orderBy("conv_id").collect().map(_.toString).toSeq
-    assert(got == direct)
-    // at-least-once replay of the LAST batch (crash between store flip and
-    // checkpoint commit): foreachBatch re-delivers the SAME batchId, so the
-    // epoch-mixed slice fingerprint makes it a detected no-op
-    val gens = new java.io.File(storeDir).list().filter(_.startsWith("gen-")).sorted.toSeq
-    graft.features.IncrementalStore.upsert(spark, storeDir,
-      b2.toDF("conv_id", "turn_idx", "role", "text", "tool", "ts"),
-      epochId = Some(1L))
-    val gens2 = new java.io.File(storeDir).list().filter(_.startsWith("gen-")).sorted.toSeq
-    assert(gens2 == gens, s"replayed batch advanced the store: $gens -> $gens2")
-    // and the SAME content under a NEW epoch is a genuinely new cycle — it
-    // merges (idempotently for the moments, but the store advances)
-    graft.features.IncrementalStore.upsert(spark, storeDir,
-      b2.toDF("conv_id", "turn_idx", "role", "text", "tool", "ts"),
-      epochId = Some(2L))
-    val gens3 = new java.io.File(storeDir).list().filter(_.startsWith("gen-")).sorted.toSeq
-    assert(gens3 != gens2, "identical-content NEW epoch was dropped as a replay")
-    // the stream-maintained store composes with the generation-drift QA
-    // gate: previous-vs-current PSI reads off the store alone (the b2
-    // re-upsert above left gen-1 = full corpus, gen-2 = full + replayed b2)
-    val dr = graft.features.IncrementalStore.drift(spark, storeDir)
-      .collect().head
-    assert(dr.getString(0) == "gap_hist" && !dr.isNullAt(2),
-      s"store drift must produce a concrete PSI row, got $dr")
-  }
-
-  test("streaming incremental near-dup: micro-batch cycles equal the corpus-wide pair pipeline") {
-    implicit val sqlCtx = spark.sqlContext
-    val dir = "/root/testdata/sf0.001"
-    val docs = Tables.documents(spark, dir)
-    val thr = docs.agg(floor(lit(0.8) * (max(col("doc_id")) + lit(1L))))
-      .head.getLong(0)
-    def tuples(df: org.apache.spark.sql.DataFrame) = df
-      .select("doc_id", "text", "source")
-      .as[(Long, String, String)].collect().toSeq
-    val mem = MemoryStream[(Long, String, String)]
-    val stream = mem.toDF().toDF("doc_id", "text", "source")
-    val store = Files.createTempDirectory("nd_stream_store").toString
-    val out = Files.createTempDirectory("nd_stream_out").toString + "/pairs"
-    val ckpt = Files.createTempDirectory("nd_stream_ckpt").toString
-    val q = StreamFeatures.neardupIncremental(stream, docs, store, out, ckpt)
-    // batch 1 = historical corpus, batch 2 = the new slice (same split as
-    // q_incremental_neardup / the SignatureStore batch spec)
-    mem.addData(tuples(docs.filter(col("doc_id") < thr)): _*)
-    q.processAllAvailable()
-    mem.addData(tuples(docs.filter(col("doc_id") >= thr)): _*)
-    q.processAllAvailable()
-    q.stop()
-    val emitted = spark.read.parquet(out)
-    def pairRows(df: org.apache.spark.sql.DataFrame) = df
-      .select("da", "db", "jaccard").orderBy("da", "db")
-      .collect().map(_.toString).toSeq
-    // every doc arrives as "new" in some batch, so the union of the two
-    // cycles' pairs is exactly the corpus-wide batch pipeline's pairs
-    assert(pairRows(emitted) == pairRows(SparkEntry.neardupLshPairs(spark, dir)),
-      "streamed cycles must union to the batch pair pipeline")
-    // batch 2's pairs all involve a new doc (old-old was settled in cycle 1)
-    val late = emitted.filter(col("batch_id") === 1L)
-    assert(late.count() > 0, "fixture must exercise the second cycle")
-    assert(late.filter(col("db") < thr && col("da") < thr).count() == 0,
-      "cycle 2 re-emitted an old-old pair")
-    // and the store now holds the full corpus signatures
-    val sigs = graft.features.SignatureStore.sigs(spark, store)
-    assert(sigs.count() == SparkEntry.lshBandSigs(docs).count())
-  }
-
-  test("multimodal: batched stub decode preserves ids, deterministic sigs") {
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val media = Multimodal.fromDocuments(docs)
-    val feats = Multimodal.extractFeatures(media, batchSize = 7)
-    assert(feats.count() == docs.count())
-    val r = feats.filter(col("media_id") === 0).collect().head
-    assert(r.getAs[Long]("n_bytes") > 0)
-    val again = Multimodal.extractFeatures(media.repartition(5), batchSize = 3)
-      .filter(col("media_id") === 0).collect().head
-    assert(r.getAs[Long]("sig") == again.getAs[Long]("sig"))
-    assert(r.getAs[scala.collection.Seq[Double]]("feature").toList ==
-           again.getAs[scala.collection.Seq[Double]]("feature").toList)
   }
 }

@@ -66,6 +66,17 @@ class PostProcessSpec extends SparkSpec {
     assert(m == Map("x" -> 0.5, "y" -> 0.25, "z" -> 0.25))
   }
 
+  test("mergeRuns: missing columns come back NULL, NULL-key rows drop (S8 merge_dataframes)") {
+    val a = Seq[(String, Option[Long])](("c1", Some(1L)), (null, Some(2L)))
+      .toDF("conv_id", "n_turns")
+    val b = Seq[(String, Option[Double])](("c2", Some(0.5))).toDF("conv_id", "len_mean")
+    val m = PostProcess.mergeRuns(a, b)
+    assert(m.columns.toSeq == Seq("conv_id", "n_turns", "len_mean"))
+    val got = m.orderBy("conv_id")
+      .as[(String, Option[Long], Option[Double])].collect().toSeq
+    assert(got == Seq(("c1", Some(1L), None), ("c2", None, Some(0.5))))
+  }
+
   test("mergeWithPrecedent: name rules (A26 mix-with-precedent, common.py:39-54)") {
     val prev = Seq(
       ("c1", Some(5L), Some(2L), Some(10.0), Some("p")),
