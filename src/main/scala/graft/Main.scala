@@ -79,9 +79,9 @@ object Main {
     // fixture layout (events.parquet → ingest normalization)
     val (turns, state) =
       if (Files.exists(Paths.get(input, "turns")))
-        (spark.read.parquet(s"$input/turns"),
+        (Tables.parquet(spark, s"$input/turns"),
           if (Files.exists(Paths.get(input, "state")))
-            Some(spark.read.parquet(s"$input/state")) else None)
+            Some(Tables.parquet(spark, s"$input/state")) else None)
       else
         (Tables.turns(spark, input), Some(Tables.state(spark, input)))
 

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 /** Canonical input tables for the transcript feature engine.
   *
@@ -30,8 +31,18 @@ object Tables {
     */
   val StateMod = 7
 
+  /** `spark.read.parquet(path)` without the schema-inference job: the
+    * schema comes from one footer read on the driver
+    * ([[org.apache.spark.sql.graft.Bridge.parquetSchema]]); a layout that
+    * rule does not decide (partition directories, schema merging) reads
+    * as before.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    Bridge.parquetSchema(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+
   def events(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/events.parquet")
+    parquet(spark, s"$dir/events.parquet")
 
   private def convId = concat(lit("c"), lpad(col("user_id").cast("string"), 6, "0"))
 
@@ -111,19 +122,19 @@ object Tables {
           (col("event_id") % 3).cast("string")).as("load_val"))
 
   def documents(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+    parquet(spark, s"$dir/documents.parquet")
 
   def embeddings(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/embeddings.parquet")
+    parquet(spark, s"$dir/embeddings.parquet")
 
   def lineitem(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/lineitem.parquet")
+    parquet(spark, s"$dir/lineitem.parquet")
 
   def orders(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/orders.parquet")
+    parquet(spark, s"$dir/orders.parquet")
 
   def customer(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/customer.parquet")
+    parquet(spark, s"$dir/customer.parquet")
 }
 
 /** DuckDB-dialect CTE bodies reproducing [[Tables]] — prepended to every

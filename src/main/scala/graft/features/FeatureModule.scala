@@ -11,15 +11,16 @@ import org.apache.spark.sql.functions._
   * module contributes declaratively to ONE logical plan:
   *
   *  - `enrich` adds per-turn columns (lag/session bounds/as-of state) — runs
-  *    in dependency order on the shared turns frame; every module window
-  *    orders by (conv_id, turn_idx), so the stack costs one sort, and
-  *    Catalyst fuses adjacent Windows unless a Project computing from the
-  *    lower one's output sits between them;
+  *    in dependency order on the shared turns frame; the lag, session and
+  *    run modules each add their column group to one native
+  *    [[graft.plans.TurnScan]] node, whose exec walks every conversation
+  *    once in (conv_id, turn_idx) order with one row of lookahead, so the
+  *    stack costs one sort and one pass;
   *  - `aggs` contributes aggregate expressions to a single shared
   *    `groupBy(conv_id)` pass — Catalyst fuses ALL modules' aggregates into
   *    one HashAggregate (musiF needs one pass per module; we need one total).
   *    Multi-pass features fold into the same pass: run and session lengths
-  *    as window columns + conditional aggs, the trimmed mean as a buffering
+  *    as per-turn columns + conditional aggs, the trimmed mean as a buffering
   *    aggregate — an earlier design joined them back as separate
   *    per-conversation frames, but the fused form needs no extra join.
   *

@@ -1,9 +1,9 @@
 package graft.features
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops.LagLead
+import graft.plans.TurnScan
 import graft.functions.{Stats, TrimmedMeanAgg}
 
 /** The built-in transcript feature modules (SURVEY.md §7.1 item 5).
@@ -11,13 +11,15 @@ import graft.functions.{Stats, TrimmedMeanAgg}
   *
   * Design rule (scale): NO module re-aggregates its own frame. Multi-level
   * features are folded into the single shared HashAggregate: session and
-  * run lengths via window columns read on END rows, the trimmed mean as an
-  * aggregate expression. Every window orders by (conv_id, turn_idx), so the
-  * flagship matrix is ONE scan of the turns table, one exchange, ONE sort
-  * and three Window operators after the as-of merge (lag/lead/row_number,
-  * then the session and the run running starts), one aggregate (plan shape
-  * pinned by PlanShapeSpec). A naive per-module groupBy design was
-  * measured to re-scan the source once per module.
+  * run lengths as per-turn columns read on END rows, the trimmed mean as an
+  * aggregate expression. The lag, session and run columns all come from ONE
+  * native [[graft.plans.TurnScan]] pass: each module's `enrich` adds its
+  * group to the same node, whose exec walks every conversation once in
+  * (conv_id, turn_idx) order with one row of lookahead. The flagship matrix
+  * is therefore ONE scan of the turns table, one exchange, the as-of merge,
+  * ONE sort and one turn scan, then one aggregate (plan shape pinned by
+  * PlanShapeSpec). A naive per-module groupBy design was measured to
+  * re-scan the source once per module.
   */
 
 /** Census: per-role and whole-conversation counts — musiF `core` + `scoring`
@@ -96,25 +98,7 @@ object LagModule extends FeatureModule {
 class SessionModuleBase(gapSeconds: Long) extends FeatureModule {
   val name = "sessions"
   override val deps: Seq[String] = Seq("lag")
-  // Boundaries straight from the turn gaps, lengths as rn - ffilled(start
-  // rn) + 1: no (conv, session) frame, no second sort. The row_number/lead
-  // columns come before any column computed from them, so Catalyst fuses
-  // them into LagModule's Window (lead(false, 1, true) is true on the last
-  // row only).
-  override def enrich(turns: DataFrame): DataFrame = {
-    val w = LagLead.convWindow()
-    val gapUs = gapSeconds * 1000000L
-    def breaks(gap: Column): Column = coalesce(gap > gapUs, lit(false))
-    turns
-      .withColumn("__rn", row_number().over(w))
-      .withColumn("sess_end", lead(lit(false), 1, true).over(w) ||
-        breaks(LagLead.micros(lead(col("ts"), 1).over(w)) - LagLead.micros(col("ts"))))
-      .withColumn("sess_start", col("__rn") === 1 || breaks(col("delta_ts_us")))
-      .withColumn("__sess_start_rn", last(when(col("sess_start"), col("__rn")),
-        ignoreNulls = true).over(w.rowsBetween(Window.unboundedPreceding, 0)))
-      .withColumn("sess_len",
-        when(col("sess_end"), col("__rn") - col("__sess_start_rn") + 1).cast("long"))
-  }
+  override def enrich(turns: DataFrame): DataFrame = TurnScan.sessions(turns, gapSeconds)
   override def aggs: Seq[Column] = Seq(
     count(when(col("sess_end"), 1)).as("n_sessions"),
     round(avg(when(col("sess_end"), col("sess_len"))), 6).as("sess_len_mean"),
@@ -179,24 +163,12 @@ object TextStatsWindowModule extends FeatureModule {
 }
 
 /** Role-run structure — W2 (melody/handler.py:675-689 ascent/descent runs).
-  * Same window-column + conditional-agg shape as sessions.
+  * Same per-turn-column + conditional-agg shape as sessions.
   */
 object RunLengthModule extends FeatureModule {
   val name = "runlength"
-  override val deps: Seq[String] = Seq("sessions") // its __rn; lag's roles
-  // Same single-sort technique as sessions, on LagModule's prev/next roles:
-  // run length measured on run END rows as rn - ffilled(start rn) + 1.
-  override def enrich(turns: DataFrame): DataFrame = {
-    def differs(other: String): Column =
-      col(other).isNull || col(other) =!= col("role")
-    turns
-      .withColumn("run_start", differs("prev_role"))
-      .withColumn("run_end", differs("next_role"))
-      .withColumn("__run_start_rn", last(when(col("run_start"), col("__rn")),
-        ignoreNulls = true).over(LagLead.convWindow().rowsBetween(Window.unboundedPreceding, 0)))
-      .withColumn("run_len",
-        when(col("run_end"), col("__rn") - col("__run_start_rn") + 1).cast("long"))
-  }
+  override val deps: Seq[String] = Seq("sessions")
+  override def enrich(turns: DataFrame): DataFrame = TurnScan.runs(turns)
   override def aggs: Seq[Column] = Seq(
     count(when(col("run_end"), 1)).as("n_runs"),
     round(avg(when(col("run_end"), col("run_len"))), 6).as("run_len_mean"),

@@ -47,7 +47,7 @@ object Windowed {
     *  2. the W8 fan-out explodes each turn into the ≤⌈ws/hop⌉ windows
     *     containing it;
     *  3. each (conv, window) slice becomes a composite-key "conversation"
-    *     (a `struct(conv_id, window_id)` key), so every module's enrich windows and aggs —
+    *     (a `struct(conv_id, window_id)` key), so every module's enrich columns and aggs —
     *     written against `conv_id` — run per window UNCHANGED: lag deltas
     *     restart at window starts, sessions/runs/trim ranks are computed
     *     within the window, exactly like the reference's per-window re-run;

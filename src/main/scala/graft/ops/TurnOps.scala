@@ -56,13 +56,10 @@ object Ordered {
 
 /** Lag/lead turn features (SURVEY.md W1/W10; musiF interval extraction,
   * musif/extract/features/melody — `_get_intervals`
-  * musif/musicxml/common.py:199-203). Pure window expressions → one Window
-  * node, WholeStageCodegen inside.
+  * musif/musicxml/common.py:199-203), computed by the native
+  * [[graft.plans.TurnScan]] pass.
   */
 object LagLead {
-  def convWindow(key: String = "conv_id", ord: String = "turn_idx") =
-    Window.partitionBy(col(key)).orderBy(col(ord))
-
   /** Exact integer microseconds since epoch. Parquet timestamps load as
     * TIMESTAMP_NTZ in Spark 4; the session runs in UTC so the cast is
     * lossless and matches DuckDB's epoch_us.
@@ -72,16 +69,7 @@ object LagLead {
   /** Adds prev/next role, inter-turn delta in microseconds (exact integer —
     * no float drift across engines), and previous text length.
     */
-  def turnLagFeatures(turns: DataFrame): DataFrame = {
-    val w = convWindow()
-    val len = if (turns.columns.contains("text_len")) col("text_len")
-              else length(col("text"))
-    turns
-      .withColumn("prev_role", lag(col("role"), 1).over(w))
-      .withColumn("next_role", lead(col("role"), 1).over(w))
-      .withColumn("delta_ts_us", LagLead.micros(col("ts")) - LagLead.micros(lag(col("ts"), 1).over(w)))
-      .withColumn("prev_text_len", lag(len, 1).over(w))
-  }
+  def turnLagFeatures(turns: DataFrame): DataFrame = graft.plans.TurnScan.lag(turns)
 }
 
 /** Gap sessionization (SURVEY.md W9): a new session starts when the gap to

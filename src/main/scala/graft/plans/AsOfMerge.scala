@@ -57,9 +57,7 @@ case class AsOfJoin(left: LogicalPlan, right: LogicalPlan,
 }
 
 /** Plans [[AsOfJoin]] as [[AsOfMergeExec]]. Registered per session via
-  * [[AsOfMerge.register]] (`spark.experimental.extraStrategies` — the
-  * public extension point; `SparkSessionExtensions.injectPlannerStrategy`
-  * is the equivalent hook when building the session yourself).
+  * [[Strategies.register]].
   */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -211,15 +209,9 @@ case class AsOfMergeExec(left: SparkPlan, right: SparkPlan,
 }
 
 /** DataFrame-level entry: build the logical node from analyzed children and
-  * register the planner strategy on the session (idempotent).
+  * register the planner strategies on the session.
   */
 object AsOfMerge {
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val exp = org.apache.spark.sql.graft.Bridge.experimental(spark)
-    if (!exp.extraStrategies.contains(AsOfJoinStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ AsOfJoinStrategy
-  }
 
   /** Same contract as [[graft.ops.AsOf.join]], planned through
     * [[AsOfMergeExec]]. `left` keeps all its columns; `right` contributes
@@ -231,7 +223,7 @@ object AsOfMerge {
     import org.apache.spark.sql.graft.Bridge
     require(valueCols.forall(!left.columns.contains(_)),
       s"left already contains one of $valueCols")
-    register(left.sparkSession)
+    Strategies.register(left.sparkSession)
     val lPlan = Bridge.analyzed(left)
     val rPlan = Bridge.analyzed(right.select((Seq(key, ts) ++ valueCols).map(col): _*))
     def attr(plan: LogicalPlan, name: String): Attribute =

@@ -47,22 +47,23 @@ class PlanShapeSpec extends SparkSpec {
     // + aggregate) + small state exchange + final ORDER BY — the as-of
     // left side must NOT re-shuffle (hash-clustered layout contract)
     assert(exchanges(p) <= 3, s"flagship exchange count regressed: ${exchanges(p)}")
-    // the module window stack: ONE sort by (conv_id, turn_idx) and three
-    // Windows (lag/lead/row_number, then the session and run running
-    // starts) between the as-of merge and the aggregate; the totals add
-    // the turn-numbering window, its sort, the state sort and the ORDER BY
+    // the module stack: ONE sort by (conv_id, turn_idx) and ONE native
+    // turn scan (lag, session and run columns) between the as-of merge and
+    // the aggregate, no Window; the totals add the turn-numbering window,
+    // its sort, the state sort and the ORDER BY
     val ls = p.linesIterator.toSeq
     val stack = ls.slice(ls.indexWhere(_.contains("ObjectHashAggregate")),
       ls.indexWhere(_.contains("AsOfMerge"))).mkString("\n")
-    assert(nodes(stack, "Window") == 3 && nodes(stack, "Sort") == 1,
-      s"flagship window stack regrew:\n$p")
-    assert(nodes(p, "Window") == 4 && nodes(p, "Sort") == 4, s"flagship plan:\n$p")
+    assert(nodes(stack, "Window") == 0 && nodes(stack, "Sort") == 1 &&
+      nodes(stack, "TurnScan") == 1, s"flagship module stack regrew:\n$p")
+    assert(nodes(p, "Window") == 1 && nodes(p, "Sort") == 4, s"flagship plan:\n$p")
     val w = plan("q_feature_matrix_windowed_full")
     assert(w.contains("AsOfMerge"), "windowed-full must run the native as-of exec")
     assert(aggs(w) == 2, s"windowed-full must stay a single fused aggregate pair, got ${aggs(w)}")
     assert(exchanges(w) <= 4, s"windowed-full exchange count regressed: ${exchanges(w)}")
     // the flagship's nodes plus the fan-out's window_id window
-    assert(nodes(w, "Window") == 5 && nodes(w, "Sort") == 4, s"windowed-full plan:\n$w")
+    assert(nodes(w, "Window") == 2 && nodes(w, "Sort") == 4 && nodes(w, "TurnScan") == 1,
+      s"windowed-full plan:\n$w")
   }
 
   test("dup-spans: one corpus tokenize pass, no self-join, bounded exchanges") {

@@ -5,16 +5,38 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.features._
 import graft.functions.Stats
-import graft.ops.Sessionize
+import graft.ops.{LagLead, Sessionize}
 
-/** The multi-window formulation of the session, run-length and trimmed-mean
-  * modules — the reference [[FeatureMatrixSpec]] holds the single-sort
-  * modules to, row for row. Sessions come from the cumulative
-  * [[Sessionize.byGap]] id, run boundaries from their own lag/lead(role),
-  * and trim ranks from a `row_number over (text_len, turn_idx)` window with
-  * n = `count over conv_id`: eight Window operators over three sorts.
+/** The Window formulation of the lag, session, run-length and
+  * trimmed-mean modules — the reference [[FeatureMatrixSpec]] and
+  * [[TurnScanSpec]] hold the native turn scan and the single-sort modules
+  * to, row for row. Lag columns come from lag/lead windows, sessions from
+  * the cumulative [[Sessionize.byGap]] id, run boundaries from their own
+  * lag/lead(role), and trim ranks from a `row_number over (text_len,
+  * turn_idx)` window with n = `count over conv_id`.
   */
 object ReferenceModules {
+
+  /** prev/next role, the exact microsecond delta to the previous turn and
+    * the previous text length (`text_len`, else `length(text)`).
+    */
+  def lagFeatures(turns: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))
+    val len = if (turns.columns.contains("text_len")) col("text_len")
+              else length(col("text"))
+    turns
+      .withColumn("prev_role", lag(col("role"), 1).over(w))
+      .withColumn("next_role", lead(col("role"), 1).over(w))
+      .withColumn("delta_ts_us", LagLead.micros(col("ts")) - LagLead.micros(lag(col("ts"), 1).over(w)))
+      .withColumn("prev_text_len", lag(len, 1).over(w))
+  }
+
+  object Lag extends FeatureModule {
+    val name = "lag"
+    override val deps: Seq[String] = LagModule.deps
+    override def enrich(turns: DataFrame): DataFrame = lagFeatures(turns)
+    override def aggs: Seq[Column] = LagModule.aggs
+  }
 
   class Sessions(gapSeconds: Long) extends FeatureModule {
     val name = "sessions"
@@ -107,11 +129,12 @@ object ReferenceModules {
       max(when(col("run_end"), col("run_len"))).as("run_len_max"))
   }
 
-  /** `modules` with each single-sort module swapped for its reference
-    * twin (the gap is the caller's; other modules pass through).
+  /** `modules` with each turn-scan and single-sort module swapped for its
+    * reference twin (the gap is the caller's; other modules pass through).
     */
   def of(modules: Seq[FeatureModule], gapSeconds: Long): Seq[FeatureModule] =
     modules.map {
+      case LagModule             => Lag
       case _: SessionModuleBase  => new Sessions(gapSeconds)
       case TextStatsModule       => TextStats
       case TextStatsWindowModule => TextStatsWindow
