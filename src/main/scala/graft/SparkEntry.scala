@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops._
+import graft.plans.TurnScan
 
 /** Driver contract — one entry per implemented operator (SURVEY.md §2), an
   * equivalent DuckDB oracle SQL for each, and the flagship pipeline.
@@ -76,14 +77,14 @@ object SparkEntry {
 
     // ——— W1/W10 lag/lead turn features ———
     "q_lag_features" -> ((s, dir) =>
-      LagLead.turnLagFeatures(Tables.turns(s, dir))
+      TurnScan.lag(Tables.turns(s, dir))
         .select(col("conv_id"), col("turn_idx"), col("prev_role"), col("next_role"),
           col("delta_ts_us"), col("prev_text_len").cast("long").as("prev_text_len"))
         .orderBy("conv_id", "turn_idx")),
 
     // ——— W9 ts-gap sessionization ———
     "q_sessionize" -> ((s, dir) =>
-      Sessionize.byGap(Tables.turns(s, dir), SessionGapSeconds)
+      TurnScan.sessions(Tables.turns(s, dir), SessionGapSeconds)
         .select("conv_id", "turn_idx", "session_id")
         .orderBy("conv_id", "turn_idx")),
 
@@ -94,15 +95,14 @@ object SparkEntry {
         .select("conv_id", "turn_idx", "session_id")
         .orderBy("conv_id", "turn_idx")),
 
-    // ——— A19-style per-conversation session stats ———
-    "q_session_stats" -> ((s, dir) =>
-      Sessionize.byGap(Tables.turns(s, dir), SessionGapSeconds)
-        .groupBy("conv_id", "session_id").agg(count(lit(1)).as("n"))
-        .groupBy("conv_id").agg(
-          count(lit(1)).as("n_sessions"),
-          round(avg(col("n")), 6).as("sess_len_mean"),
-          max(col("n")).as("sess_len_max"))
-        .orderBy("conv_id")),
+    // ——— A19-style per-conversation session stats: the feature matrix's
+    //     session aggregates, read on session END rows (one groupBy) ———
+    "q_session_stats" -> ((s, dir) => {
+      val aggs = graft.features.SessionModule.aggs
+      TurnScan.sessions(Tables.turns(s, dir), SessionGapSeconds)
+        .groupBy("conv_id").agg(aggs.head, aggs.tail: _*)
+        .orderBy("conv_id")
+    }),
 
     // ——— J1 as-of join, at-or-before semantics ———
     "q_asof_state" -> ((s, dir) =>
@@ -197,7 +197,9 @@ object SparkEntry {
         .orderBy("conv_id")),
 
     // ——— W3 rolling aggregate (trailing 5-row frame over turn order; a
-    //     true centered frame lives in Windowed.motion) ———
+    //     true centered frame lives in Windowed.motion). A Window, not the
+    //     turn scan: a 5-row frame needs four rows of lookbehind, the
+    //     scan keeps one ———
     "q_rolling_textlen" -> ((s, dir) => {
       val w = Window.partitionBy(col("conv_id")).orderBy(col("turn_idx")).rowsBetween(-4, 0)
       Tables.turns(s, dir)
@@ -208,7 +210,7 @@ object SparkEntry {
 
     // ——— W2 run-length encoding of role runs ———
     "q_runlength_roles" -> ((s, dir) =>
-      RunLength.runStats(Tables.turns(s, dir), "role")
+      RunLength.runStats(Tables.turns(s, dir))
         .orderBy("conv_id")),
 
     // ——— J3 pairwise role theta-join (texture ratios, inf/nan edge rules) ———
@@ -1375,11 +1377,8 @@ object SparkEntry {
     // HashAggregate; swap to approx_percentile when a sketch tolerance
     // is acceptable — same plan shape, no oracle equality.
     "q_gap_quantiles" -> ((s, dir) => {
-      val w = Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))
-      Tables.turns(s, dir)
-        .withColumn("gap_s",
-          (LagLead.micros(col("ts")) -
-            LagLead.micros(lag(col("ts"), 1).over(w))).cast("double") / 1e6)
+      TurnScan.lag(Tables.turns(s, dir))
+        .withColumn("gap_s", col("delta_ts_us").cast("double") / 1e6)
         .filter(col("gap_s").isNotNull)
         .groupBy(col("role"))
         .agg(
@@ -1493,11 +1492,8 @@ object SparkEntry {
     // (sketch internals are engine-specific, they do not hash-match);
     // OpsVariantsSpec pins it within tolerance of the exact form.
     "q_gap_quantiles_approx" -> ((s, dir) => {
-      val w = Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))
-      Tables.turns(s, dir)
-        .withColumn("gap_s",
-          (LagLead.micros(col("ts")) -
-            LagLead.micros(lag(col("ts"), 1).over(w))).cast("double") / 1e6)
+      TurnScan.lag(Tables.turns(s, dir))
+        .withColumn("gap_s", col("delta_ts_us").cast("double") / 1e6)
         .filter(col("gap_s").isNotNull)
         .groupBy(col("role"))
         .agg(
@@ -1584,6 +1580,8 @@ object SparkEntry {
       val j = AsOf.join(Tables.turns(s, dir), Tables.state(s, dir),
         "conv_id", "ts", Seq("state_val"), AsOf.AtOrBefore)
         .withColumn("state_key", coalesce(col("state_val"), lit("none")))
+      // a Window, not the turn scan: the scan lags `role`, and this lags
+      // the as-of state
       val w = Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))
       j.withColumn("changed",
           when(lag(col("state_key"), 1).over(w).isNotNull &&
@@ -1810,6 +1808,8 @@ object SparkEntry {
 
     // ——— A10/A11: duration-weighted mean + gradient over the gap axis ———
     "q_weighted_mean" -> ((s, dir) => {
+      // a Window, not the turn scan: the weight is the gap to the NEXT
+      // turn (lead(ts)), which the scan does not emit
       val w = Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))
       val gapS = (LagLead.micros(lead(col("ts"), 1).over(w)) - LagLead.micros(col("ts"))) / 1e6
       Tables.turns(s, dir)
@@ -1827,16 +1827,12 @@ object SparkEntry {
     }),
 
     // ——— A12 mean-of-nonzero: mean inter-turn gap ignoring zero gaps ———
-    "q_mean_nonzero" -> ((s, dir) => {
-      val w = Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))
-      Tables.turns(s, dir)
-        .withColumn("delta_us",
-          LagLead.micros(col("ts")) - LagLead.micros(lag(col("ts"), 1).over(w)))
+    "q_mean_nonzero" -> ((s, dir) =>
+      TurnScan.lag(Tables.turns(s, dir))
         .groupBy("conv_id")
-        .agg(round(avg(when(col("delta_us") =!= 0, col("delta_us") / 1e6)), 6)
+        .agg(round(avg(when(col("delta_ts_us") =!= 0, col("delta_ts_us") / 1e6)), 6)
           .as("gap_mean_nonzero_s"))
-        .orderBy("conv_id")
-    }),
+        .orderBy("conv_id")),
 
     // ——— P6 availability filter: keep conversations where required
     //     signals exist (musiF skips scores missing required parts) ———
@@ -1982,13 +1978,9 @@ object SparkEntry {
     //     (the 66-output bucket battery shape, scoring/handler.py) ———
     "q_bucket_battery" -> ((s, dir) => {
       val len = length(col("text"))
-      val us = LagLead.micros(col("ts"))
       def bucket(c: org.apache.spark.sql.Column, name: String) =
         sum(when(c, 1L).otherwise(0L)).as(name)
-      Tables.turns(s, dir)
-        .withColumn("delta_us",
-          us - LagLead.micros(lag(col("ts"), 1).over(
-            Window.partitionBy(col("conv_id")).orderBy(col("turn_idx")))))
+      TurnScan.lag(Tables.turns(s, dir))
         .groupBy("conv_id")
         .agg(
           bucket(len < 50, "n_len_0_49"),
@@ -1996,10 +1988,10 @@ object SparkEntry {
           bucket(len >= 100 && len < 150, "n_len_100_149"),
           bucket(len >= 150 && len < 200, "n_len_150_199"),
           bucket(len >= 200, "n_len_200_plus"),
-          bucket(col("delta_us") < 60000000L, "n_gap_under_1m"),
-          bucket(col("delta_us") >= 60000000L && col("delta_us") < 3600000000L, "n_gap_1m_1h"),
-          bucket(col("delta_us") >= 3600000000L && col("delta_us") < 86400000000L, "n_gap_1h_1d"),
-          bucket(col("delta_us") >= 86400000000L, "n_gap_over_1d"),
+          bucket(col("delta_ts_us") < 60000000L, "n_gap_under_1m"),
+          bucket(col("delta_ts_us") >= 60000000L && col("delta_ts_us") < 3600000000L, "n_gap_1m_1h"),
+          bucket(col("delta_ts_us") >= 3600000000L && col("delta_ts_us") < 86400000000L, "n_gap_1h_1d"),
+          bucket(col("delta_ts_us") >= 86400000000L, "n_gap_over_1d"),
           bucket(col("role") === "user" && len >= 100, "n_long_user"),
           bucket(col("role") === "assistant" && len >= 100, "n_long_assistant"),
           bucket(col("tool").isNotNull && col("role") === "tool", "n_tool_role_calls"))
@@ -2091,20 +2083,20 @@ object SparkEntry {
         .orderBy("conv_id", "w_start_us")
     }),
 
-    // ——— W7 tie-merge: fuse consecutive same-role turns (utterances) ———
-    "q_tie_merge" -> ((s, dir) => {
-      val w = Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))
-      val t = Tables.turns(s, dir)
-        .withColumn("text_len", length(col("text")).cast("long"))
-        .withColumn("__start",
-          lag(col("role"), 1).over(w).isNull ||
-            lag(col("role"), 1).over(w) =!= col("role"))
-      TieMerge.fuse(t, col("__start"), "role", "text_len")
-        .select(col("conv_id"), col("fuse_id"), col("role"),
-          col("text_len").as("len_sum"), col("n_fused"),
-          col("start_turn_idx"), col("end_turn_idx"))
-        .orderBy("conv_id", "fuse_id")
-    }),
+    // ——— W7 tie-merge: fuse consecutive same-role turns (utterances) —
+    //     musiF folds a tied note's duration into the note that starts the
+    //     tie (density/handler.py:175-197); here each role run is one fused
+    //     row: the run's first role, its summed text length, its span ———
+    "q_tie_merge" -> ((s, dir) =>
+      TurnScan.runs(Tables.turns(s, dir))
+        .groupBy(col("conv_id"), col("run_id").as("fuse_id"))
+        .agg(
+          min_by(col("role"), col("turn_idx")).as("role"),
+          sum(length(col("text")).cast("long")).as("len_sum"),
+          count(lit(1)).as("n_fused"),
+          min(col("turn_idx")).as("start_turn_idx"),
+          max(col("turn_idx")).as("end_turn_idx"))
+        .orderBy("conv_id", "fuse_id")),
 
     // ——— W6 stateful ordered scan: tool-call episode assembly with
     //     silence reset (flatMapSortedGroups escape hatch) ———

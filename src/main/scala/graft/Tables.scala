@@ -61,6 +61,8 @@ object Tables {
     // EXPRESSION, which Catalyst extracts as a hidden `_w0` column),
     // downstream operators cannot see the co-location and EnsureRequirements
     // inserts a second full-table shuffle (measured on the flagship plan).
+    // (the numbering window orders by (ts, event_id): it makes turn_idx,
+    // so the turn scan, which walks turn_idx order, cannot replace it)
     val w = Window.partitionBy(col("conv_id")).orderBy(col("ts"), col("event_id"))
     // NOTE (r7, measured): pinning this exchange at the session width
     // (explicit repartition, exempt from AQE coalescing) was tried and

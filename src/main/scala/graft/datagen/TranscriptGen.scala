@@ -42,6 +42,8 @@ object TranscriptGen {
         lit(1000000L) * (lit(1) + pmod(col("h"), lit(600))) +
           when(pmod(col("h"), lit(37)) === 0, lit(172800000000L)).otherwise(0L))
 
+    // a running sum of gaps (the generator builds ts, it reads none), so a
+    // Window frame, not the turn scan
     val w = Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))
       .rowsBetween(Window.unboundedPreceding, 0)
 

@@ -1,9 +1,9 @@
 package graft.features
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops.LagLead
+import graft.plans.TurnScan
 
 /** Incremental feature maintenance — the feature-store upsert pattern the
   * batch flagship cannot express: when a new slice of turns is appended
@@ -97,12 +97,11 @@ object Incremental {
                families: Set[String] = AllFamilies): DataFrame = {
     require(families.subsetOf(AllFamilies),
       s"unknown partials families: ${families -- AllFamilies}")
-    val w = Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))
     val len = length(col("text")).cast("long")
     val us = LagLead.micros(col("ts"))
-    val gapBreak = when(
-      us - LagLead.micros(lag(col("ts"), 1).over(w)) > gapSeconds * 1000000L, 1L
-    ).otherwise(0L)
+    // one ordered turn walk: the gap to the previous turn (delta_ts_us)
+    // and the slice's session starts (sess_start) for every family below
+    val walked = TurnScan.sessions(TurnScan.lag(turns), gapSeconds)
     // two-level histogram aggregate: (conv_id, tool) counts → map. The
     // second groupBy and the join key are a prefix of the first's key, so
     // all of it extends the conv_id partitioning — no extra exchange.
@@ -124,9 +123,8 @@ object Incremental {
     // of slice a → first turn of slice b) is not visible to either side;
     // [[merge]] adds it from (last_us, first_us), the same stitch trick as
     // `sessions`, preserving Σcounts == n-1 per conversation.
-    val gapUs = us - LagLead.micros(lag(col("ts"), 1).over(w))
-    lazy val gaps = turns
-      .select(col("conv_id"), gapUs.as("__gap_us"))
+    lazy val gaps = walked
+      .select(col("conv_id"), col("delta_ts_us").as("__gap_us"))
       .filter(col("__gap_us").isNotNull)
       .select(col("conv_id"),
         least(expr(s"__gap_us div $GapBinUs"), lit(GapBinMax.toLong))
@@ -135,9 +133,9 @@ object Incremental {
       .groupBy(col("conv_id"))
       .agg(map_from_entries(
         array_sort(collect_list(struct(col("__bin"), col("__n"))))).as("gap_hist"))
-    val base = turns
+    val base = walked
       .select(col("conv_id"), col("turn_idx"), col("role"), col("tool"),
-        len.as("__len"), us.as("__us"), gapBreak.as("__brk"))
+        len.as("__len"), us.as("__us"), col("sess_start"))
       .groupBy(col("conv_id"))
       .agg(
         count(lit(1)).as("n"),
@@ -153,7 +151,7 @@ object Incremental {
         max(col("__len")).as("len_max"),
         min(col("__us")).as("first_us"),
         max(col("__us")).as("last_us"),
-        (sum(col("__brk")) + lit(1L)).as("sessions"))
+        count(when(col("sess_start"), 1)).as("sessions"))
     val withHist = if (families(FamHist)) base.join(hist, Seq("conv_id"), "left") else base
     val withKmv = if (families(FamKmv)) withHist.join(kmv, Seq("conv_id"), "left") else withHist
     if (families(FamGapHist)) withKmv.join(gaps, Seq("conv_id"), "left") else withKmv

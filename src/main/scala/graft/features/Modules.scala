@@ -81,7 +81,7 @@ object AsOfStateModule extends StatefulModule {
 object LagModule extends FeatureModule {
   val name = "lag"
   override val deps: Seq[String] = Seq("asofstate")
-  override def enrich(turns: DataFrame): DataFrame = LagLead.turnLagFeatures(turns)
+  override def enrich(turns: DataFrame): DataFrame = TurnScan.lag(turns)
   // Stats in SECONDS: micro-magnitudes (~1e10) would leave float-sum noise
   // above round(,6) resolution; second-magnitudes keep parity bit-stable.
   override def aggs: Seq[Column] = Seq(
@@ -92,8 +92,9 @@ object LagModule extends FeatureModule {
 
 /** Sessions — W9 + A19 (harmony/utils.py:207-271 pattern). A session
   * breaks where the gap between consecutive turns exceeds `gapSeconds`
-  * (NULL gap = no break, as in [[graft.ops.Sessionize.byGap]]); lengths are
-  * measured on session END rows.
+  * (NULL gap = no break; the same breaks number `session_id` in
+  * [[graft.plans.TurnScan.sessions]]); lengths are measured on session END
+  * rows, so `q_session_stats` reads these aggregates too.
   */
 class SessionModuleBase(gapSeconds: Long) extends FeatureModule {
   val name = "sessions"

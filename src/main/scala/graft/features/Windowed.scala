@@ -107,6 +107,8 @@ object Windowed {
     */
   def motion(turns: DataFrame, stepSeconds: Int, win: Int,
              capSeconds: Int = 600): DataFrame = {
+    // a Window, not the turn scan: the duration is the gap to the NEXT
+    // turn (lead(ts)), which the scan does not emit
     val w = Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))
     val durS = least(
       (unix_micros(lead(col("ts"), 1).over(w).cast("timestamp")) -

@@ -56,8 +56,9 @@ object Ordered {
 
 /** Lag/lead turn features (SURVEY.md W1/W10; musiF interval extraction,
   * musif/extract/features/melody — `_get_intervals`
-  * musif/musicxml/common.py:199-203), computed by the native
-  * [[graft.plans.TurnScan]] pass.
+  * musif/musicxml/common.py:199-203) come from the native
+  * [[graft.plans.TurnScan]] pass (`TurnScan.lag`); this holds the
+  * timestamp convention every engine-side delta uses.
   */
 object LagLead {
   /** Exact integer microseconds since epoch. Parquet timestamps load as
@@ -65,30 +66,6 @@ object LagLead {
     * lossless and matches DuckDB's epoch_us.
     */
   def micros(c: Column): Column = unix_micros(c.cast("timestamp"))
-
-  /** Adds prev/next role, inter-turn delta in microseconds (exact integer —
-    * no float drift across engines), and previous text length.
-    */
-  def turnLagFeatures(turns: DataFrame): DataFrame = graft.plans.TurnScan.lag(turns)
-}
-
-/** Gap sessionization (SURVEY.md W9): a new session starts when the gap to
-  * the previous turn exceeds `gapSeconds`. Batch form of
-  * `session_window($"ts", gap)`. Pattern mirrors musiF's key-area change-point
-  * segmentation (musif/extract/features/harmony/utils.py:207-271).
-  */
-object Sessionize {
-  def byGap(turns: DataFrame, gapSeconds: Long,
-            key: String = "conv_id", ts: String = "ts", ord: String = "turn_idx"): DataFrame = {
-    val w = Window.partitionBy(col(key)).orderBy(col(ord))
-    val gapUs = gapSeconds * 1000000L
-    val newSess = when(
-      LagLead.micros(col(ts)) - LagLead.micros(lag(col(ts), 1).over(w)) > gapUs, 1
-    ).otherwise(0)
-    turns.withColumn(
-      "session_id",
-      sum(newSess).over(w.rowsBetween(Window.unboundedPreceding, 0)).cast("int"))
-  }
 }
 
 /** Blocked ordered scan with boundary carry (SURVEY.md §7.4#2) — the skew
@@ -100,15 +77,19 @@ object Sessionize {
   * cheap window + broadcast join back. Exactly the streaming "carry state
   * between micro-batches" trick applied spatially.
   *
-  * Result is row-identical to the single-window form (property-tested);
-  * use when a key's row count exceeds what one task should sort (~10⁷).
+  * Result is row-identical to the turn scan's `session_id`
+  * (property-tested); use when a key's row count exceeds what one task
+  * should sort (~10⁷).
   */
 object BlockedScan {
 
-  /** Sessionize-by-gap (≡ [[Sessionize.byGap]]) with per-key parallelism
-    * `⌈rows/blockRows⌉`. Cost: one extra groupBy + two broadcast-sized
-    * frames vs the single-window form; each heavy window now sorts only
-    * (key, block) slices.
+  /** Sessionize-by-gap (`session_id` ≡ [[graft.plans.TurnScan.sessions]])
+    * with per-key parallelism `⌈rows/blockRows⌉`. Kept beside the turn
+    * scan as its measured skew twin: the scan walks one key on one task,
+    * this splits a giant key across tasks (crossover in BENCH.md, measured
+    * by `graft.tools.SkewBench`). Cost: one extra groupBy + two
+    * broadcast-sized frames; each heavy window sorts only (key, block)
+    * slices.
     */
   def sessionizeByGap(turns: DataFrame, gapSeconds: Long, blockRows: Int,
                       key: String = "conv_id", ts: String = "ts",
@@ -163,7 +144,9 @@ object BlockedScan {
 /** Forward-fill / last-observation-carried-forward (SURVEY.md W5; musiF
   * time-signature carry and tonality-map gap fill,
   * musif/extract/features/tempo/handler.py:120-136,
-  * scale_relative/utils.py:61-72).
+  * scale_relative/utils.py:61-72). Window frames, not the turn scan: the
+  * last non-NULL value can lie any number of rows back (or ahead), and the
+  * scan carries only the previous row.
   */
 object Backfill {
   def ffill(df: DataFrame, valueCol: String, outCol: String,
@@ -204,71 +187,21 @@ object Salted {
   }
 }
 
-/** Run-length encoding of equal-value runs (SURVEY.md W2/W4; musiF
-  * ascent/descent chunking melody/handler.py:675-689 and dedup-consecutive
-  * harmony/utils.py:23). change-flag → cumulative sum = run id.
+/** Run-length encoding of role runs (SURVEY.md W2/W4; musiF ascent/descent
+  * chunking melody/handler.py:675-689 and dedup-consecutive
+  * harmony/utils.py:23): the turn scan's `run_id` numbers the runs.
   */
 object RunLength {
-  /** Adds `run_id` (0-based per key) for runs of equal `valueCol`. */
-  def runIds(df: DataFrame, valueCol: String,
-             key: String = "conv_id", ord: String = "turn_idx"): DataFrame = {
-    val w = Window.partitionBy(col(key)).orderBy(col(ord))
-    val changed = when(
-      lag(col(valueCol), 1).over(w).isNull ||
-        lag(col(valueCol), 1).over(w) =!= col(valueCol), 1).otherwise(0)
-    df.withColumn("run_id",
-      (sum(changed).over(w.rowsBetween(Window.unboundedPreceding, 0)) - 1).cast("int"))
-  }
-
-  /** Per-conversation run statistics over `valueCol` runs. */
-  def runStats(df: DataFrame, valueCol: String,
-               key: String = "conv_id", ord: String = "turn_idx"): DataFrame =
-    runIds(df, valueCol, key, ord)
-      .groupBy(col(key), col("run_id"))
-      .agg(first(col(valueCol)).as("run_val"), count(lit(1)).as("run_len"))
-      .groupBy(col(key))
+  /** Per-conversation statistics over runs of equal `role`. */
+  def runStats(turns: DataFrame): DataFrame =
+    graft.plans.TurnScan.runs(turns)
+      .groupBy(col("conv_id"), col("run_id"))
+      .agg(count(lit(1)).as("run_len"))
+      .groupBy(col("conv_id"))
       .agg(
         count(lit(1)).as("n_runs"),
         round(avg(col("run_len")), 6).as("run_len_mean"),
         max(col("run_len")).as("run_len_max"))
-}
-
-/** Tie-merge / group-fuse (SURVEY.md W7; musiF tied-note fusion,
-  * musif/extract/features/density/handler.py:175-197: a tied note's
-  * duration folds into the note that starts the tie). Generic form: a
-  * start-flag column marks fuse-group starts; cumulative-sum of the flag
-  * is the group id; one grouped aggregate emits the fused rows — value
-  * from the group's first row, durations summed. The groupBy key extends
-  * the (key) partitioning the flag's window already established, so the
-  * aggregate is partial-combine local.
-  */
-object TieMerge {
-  /** Adds `fuse_id` (0-based per key): rows between consecutive true
-    * `startFlag`s share an id. The flag must be true on each group's first
-    * row (lag-based flags are null-safe via `when`).
-    */
-  def fuseIds(df: DataFrame, startFlag: Column,
-              key: String = "conv_id", ord: String = "turn_idx"): DataFrame = {
-    val w = Window.partitionBy(col(key)).orderBy(col(ord))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    df.withColumn("fuse_id",
-      (sum(when(startFlag, 1).otherwise(0)).over(w) - 1).cast("int"))
-  }
-
-  /** Fused rows: one per (key, fuse_id) with the group-start value of
-    * `valueCol` (deterministic: min_by on `ord`), the summed `durCol`,
-    * the fused-row count and the ord span.
-    */
-  def fuse(df: DataFrame, startFlag: Column, valueCol: String, durCol: String,
-           key: String = "conv_id", ord: String = "turn_idx"): DataFrame =
-    fuseIds(df, startFlag, key, ord)
-      .groupBy(col(key), col("fuse_id"))
-      .agg(
-        min_by(col(valueCol), col(ord)).as(valueCol),
-        sum(col(durCol)).as(durCol),
-        count(lit(1)).as("n_fused"),
-        min(col(ord)).as(s"start_$ord"),
-        max(col(ord)).as(s"end_$ord"))
 }
 
 /** Overlapping sliding windows over `turn_idx` (SURVEY.md W8; musiF
@@ -279,6 +212,8 @@ object TieMerge {
   * window ids containing it, then any per-window aggregate is an ordinary
   * groupBy. At scale the fan-out factor is ceil(ws/hop) (small constant),
   * and the groupBy keys extend the conv_id partitioning → local aggregation.
+  * The conversation length comes from an unordered `count over (key)`
+  * window: a fan-out is no ordered walk, so the turn scan has no part here.
   */
 object WindowFanout {
   /** Adds `window_id`; fan-out by explode(sequence(lo, hi)).

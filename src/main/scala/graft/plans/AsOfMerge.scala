@@ -225,7 +225,12 @@ object AsOfMerge {
       s"left already contains one of $valueCols")
     Strategies.register(left.sparkSession)
     val lPlan = Bridge.analyzed(left)
-    val rPlan = Bridge.analyzed(right.select((Seq(key, ts) ++ valueCols).map(col): _*))
+    // every right column is aliased, so the right child owns fresh
+    // attribute ids: a state frame derived from the turns frame would
+    // otherwise share the left's ids, and when the analyzer renews the
+    // right relation the node's right key and ts would be left pointing
+    // at the left side
+    val rPlan = Bridge.analyzed(right.select((Seq(key, ts) ++ valueCols).map(c => col(c).as(c)): _*))
     def attr(plan: LogicalPlan, name: String): Attribute =
       plan.output.find(_.name == name).getOrElse(
         throw new IllegalArgumentException(s"column $name not found in ${plan.output.map(_.name)}"))

@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, JoinedRow, SortOrder, SpecificInternalRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
@@ -11,40 +12,54 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.SQLMetrics
 import org.apache.spark.sql.functions.{col, length}
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
+import org.apache.spark.sql.types.{BooleanType, DataType, IntegerType, LongType}
 
 /** The ordered per-conversation turn walk — musiF walks each part's notes
   * in order for its intervals, runs and change-point segments — as ONE
   * operator: a `LogicalPlan` node, a `SparkStrategy` and [[TurnScanExec]],
-  * built like [[AsOfMerge]].
+  * built like [[AsOfMerge]]. It is the engine's one spelling of a
+  * `(conv_id ORDER BY turn_idx)` lag, session or run scan.
   *
   * The exec requires its input clustered by `key` and sorted by
   * `(key, order)`, then streams each partition once, forward, with one row
   * of lookahead and O(1) state, adding any of three column groups:
   *  - lag: `prev_role`, `next_role`, `delta_ts_us` (exact integer
   *    microseconds) and `prev_text_len`;
-  *  - sessions: `sess_start`, `sess_end` and, on end rows, `sess_len` —
-  *    a session breaks where the gap between consecutive turns exceeds
+  *  - sessions: `sess_start`, `sess_end`, on end rows `sess_len`, and
+  *    `session_id`, the 0-based count of `sess_start` rows so far — a
+  *    session breaks where the gap between consecutive turns exceeds
   *    `gapUs` (a NULL gap is no break);
-  *  - runs: `run_start`, `run_end` and, on end rows, `run_len`, for runs of
-  *    equal `role` — three-valued like `prev_role IS NULL OR prev_role <>
-  *    role`: a NULL role after a non-NULL neighbour is NULL, not true.
-  * Rows keep their order, so the output partitioning and ordering are the
-  * child's and a downstream `groupBy(key)` needs no exchange.
+  *  - runs: `run_start`, `run_end`, on end rows `run_len`, and `run_id`,
+  *    the 0-based count of `run_start` rows so far, for runs of equal
+  *    `role` — three-valued like `prev_role IS NULL OR prev_role <> role`:
+  *    a NULL role after a non-NULL neighbour is NULL, not true, and a NULL
+  *    start counts 0 (the row joins the run before it).
+  * A NULL key is its own group. Rows keep their order, so the output
+  * partitioning and ordering are the child's and a downstream
+  * `groupBy(key)` needs no exchange.
+  *
+  * Duplicate `(key, order)` rows: the required sort leaves tied rows in no
+  * defined order, so every lag value, flag, length and id computed on a
+  * tie can depend on the order in which the tied rows arrive (as in the
+  * Window form, whose sort leaves ties open the same way). Callers whose
+  * `order` can tie must break the tie in `order` itself.
   *
   * `tsUs` is a helper column projected just below the node
   * (`unix_micros(ts)`, so time-zone handling stays in Catalyst), as is
   * `len` when the frame has no `text_len` (`length(text)`); helpers are
   * consumed here and not passed through. A produced column replaces an
-  * input column of the same name, as `withColumn` does.
+  * input column of the same name, as `withColumn` does. The node is a
+  * `MultiInstanceRelation` so that a frame can meet itself in a join or a
+  * set operation: the analyzer renews the produced attributes of one side.
   */
 case class TurnScan(child: LogicalPlan, key: Attribute, order: Attribute,
                     role: Option[Attribute], tsUs: Option[Attribute], len: Option[Attribute],
                     lag: Boolean, gapUs: Option[Long], runs: Boolean,
                     produced: Seq[Attribute])
-    extends UnaryNode {
+    extends UnaryNode with MultiInstanceRelation {
   override def output: Seq[Attribute] = TurnScan.passThrough(child.output, produced) ++ produced
   override def producedAttributes: AttributeSet = AttributeSet(produced)
+  override def newInstance(): TurnScan = copy(produced = produced.map(_.newInstance()))
   override protected def withNewChildInternal(newChild: LogicalPlan): TurnScan =
     copy(child = newChild)
 }
@@ -118,8 +133,8 @@ case class TurnScanExec(child: SparkPlan, key: Attribute, order: Attribute,
       var slot = 0
       def alloc(n: Int): Int = { val s = slot; slot += n; s }
       val lagAt = if (doLag) alloc(4) else -1
-      val sessAt = if (doSess) alloc(3) else -1
-      val runAt = if (doRuns) alloc(3) else -1
+      val sessAt = if (doSess) alloc(4) else -1
+      val runAt = if (doRuns) alloc(4) else -1
 
       new Iterator[InternalRow] {
         // the row being emitted and its lookahead, each copied once when
@@ -130,7 +145,7 @@ case class TurnScanExec(child: SparkPlan, key: Attribute, order: Attribute,
         private var nxtTs = 0L
         private var nxtTsNull = true
         private var nxtSameKey = false // nxt is in cur's conversation
-        private var rn, sessStartRn, runStartRn = 0
+        private var rn, sessStartRn, runStartRn, sessId, runId = 0
         private var prevRole, prevLen: Any = _
         private var prevTs = 0L
         private var prevTsNull = true
@@ -173,10 +188,11 @@ case class TurnScanExec(child: SparkPlan, key: Attribute, order: Attribute,
           if (doSess) {
             val start = first || (hasDelta && curTs - prevTs > gap)
             val end = last || (!curTsNull && !nxtTsNull && nxtTs - curTs > gap)
-            if (start) sessStartRn = rn
+            if (start) { sessStartRn = rn; sessId = if (first) 0 else sessId + 1 }
             f.setBoolean(sessAt, start)
             f.setBoolean(sessAt + 1, end)
             if (end) f.setLong(sessAt + 2, rn - sessStartRn + 1L) else f.setNullAt(sessAt + 2)
+            f.setInt(sessAt + 3, sessId)
           }
           if (doRuns) {
             // prev_role IS NULL OR prev_role <> role, and the same with next
@@ -184,10 +200,11 @@ case class TurnScanExec(child: SparkPlan, key: Attribute, order: Attribute,
             val start = first || prevRole == null || (curRole != null && !roleEqPrev)
             val endNull = !last && nxtRole != null && curRole == null
             val end = last || nxtRole == null || (curRole != null && !roleEqNext)
-            if (start) runStartRn = rn
+            if (start) { runStartRn = rn; runId = if (first) 0 else runId + 1 }
             if (startNull) f.setNullAt(runAt) else f.setBoolean(runAt, start)
             if (endNull) f.setNullAt(runAt + 1) else f.setBoolean(runAt + 1, end)
             if (end) f.setLong(runAt + 2, rn - runStartRn + 1L) else f.setNullAt(runAt + 2)
+            f.setInt(runAt + 3, runId)
           }
 
           prevRole = curRole
@@ -214,8 +231,8 @@ case class TurnScanExec(child: SparkPlan, key: Attribute, order: Attribute,
   */
 object TurnScan {
   val LagColumns: Seq[String] = Seq("prev_role", "next_role", "delta_ts_us", "prev_text_len")
-  val SessionColumns: Seq[String] = Seq("sess_start", "sess_end", "sess_len")
-  val RunColumns: Seq[String] = Seq("run_start", "run_end", "run_len")
+  val SessionColumns: Seq[String] = Seq("sess_start", "sess_end", "sess_len", "session_id")
+  val RunColumns: Seq[String] = Seq("run_start", "run_end", "run_len", "run_id")
 
   private val Helper = "__turn_scan_"
   private val TsHelper = Helper + "ts_us"
@@ -231,11 +248,16 @@ object TurnScan {
     */
   def lag(turns: DataFrame): DataFrame = add(turns, lag = true, gapUs = None, runs = false)
 
-  /** Session columns for a `gapSeconds` session break. */
+  /** Session columns for a `gapSeconds` session break; `session_id` is the
+    * gap-sessionization id (SURVEY.md W9, the batch form of
+    * `session_window`).
+    */
   def sessions(turns: DataFrame, gapSeconds: Long): DataFrame =
     add(turns, lag = false, gapUs = Some(gapSeconds * 1000000L), runs = false)
 
-  /** Role-run columns. */
+  /** Role-run columns; `groupBy(conv_id, run_id)` fuses each run of equal
+    * roles into one row (SURVEY.md W2/W7).
+    */
   def runs(turns: DataFrame): DataFrame = add(turns, lag = false, gapUs = None, runs = true)
 
   private def add(turns: DataFrame, lag: Boolean, gapUs: Option[Long], runs: Boolean): DataFrame = {
@@ -264,8 +286,8 @@ object TurnScan {
       if (!on) Nil else names.zip(types).map { case (n, t) => AttributeReference(n, t)() }
     val produced =
       group(lag, LagColumns, Seq(role.get.dataType, role.get.dataType, LongType, len.get.dataType)) ++
-        group(gapUs.isDefined, SessionColumns, Seq(BooleanType, BooleanType, LongType)) ++
-        group(runs, RunColumns, Seq(BooleanType, BooleanType, LongType))
+        group(gapUs.isDefined, SessionColumns, Seq(BooleanType, BooleanType, LongType, IntegerType)) ++
+        group(runs, RunColumns, Seq(BooleanType, BooleanType, LongType, IntegerType))
     Bridge.ofRows(base.sparkSession, TurnScan(child, attr("conv_id"), attr("turn_idx"),
       role, ts, len, lag, gapUs, runs, produced))
   }

@@ -2,7 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.ops.{BlockedScan, Sessionize}
+import graft.ops.BlockedScan
+import graft.plans.TurnScan
 
 /** Skew-crossover experiment (r3 VERDICT #6): demonstrate that the
   * boundary-carry blocked scan WINS where it exists to win — a corpus whose
@@ -11,9 +12,10 @@ import graft.ops.{BlockedScan, Sessionize}
   * `q_sessionize_blocked` proves row-identity at fixture scale with a demo
   * `blockRows=16`, where the carry machinery costs ~3× the plain window
   * (documented in TurnOps). The failure mode it guards against only appears
-  * when ONE conversation's rows dominate a whole task: the plain
-  * single-window form serializes that key's sort + scan on one core while
-  * every other core idles. Here the generator's skew tail is cranked so the
+  * when ONE conversation's rows dominate a whole task: the plain form, the
+  * turn scan's `session_id` ([[graft.plans.TurnScan.sessions]]),
+  * serializes that key's sort + scan on one core while every other core
+  * idles. Here the generator's skew tail is cranked so the
   * biggest conversation is ~`giantTurns` rows (vs a ~160-turn median), and
   * both forms sessionize the SAME materialized parquet at local[32] with
   * `blockRows = 100000` — the realistic setting: a block sorts in-memory in
@@ -68,7 +70,7 @@ object SkewBench {
       df.write.mode("overwrite").format("noop").save()
       (System.nanoTime() - t0) / 1e9
     }
-    val plainF = () => Sessionize.byGap(turns, 3600)
+    val plainF = () => TurnScan.sessions(turns, 3600)
     val blockedF = () => BlockedScan.sessionizeByGap(turns, 3600, blockRows = 100000)
 
     // row-identity on THIS corpus before timing anything (the property

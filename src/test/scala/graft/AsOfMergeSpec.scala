@@ -73,6 +73,29 @@ class AsOfMergeSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
+  test("state derived from the turns frame: exec == union-window form") {
+    // the right side shares the left's lineage (one relation, read twice)
+    val st = turns.select(col("conv_id"), col("ts"), col("role").as("state_val"))
+    for (strict <- Seq(false, true)) {
+      val sem = if (strict) AsOf.StrictlyBefore else AsOf.AtOrBefore
+      val native = AsOfMerge.join(turns, st, "conv_id", "ts", Seq("state_val"), strict)
+      assert(native.count() == turns.count())
+      assert(canon(native) == canon(AsOf.join(turns, st, "conv_id", "ts", Seq("state_val"), sem)),
+        s"strict=$strict")
+    }
+  }
+
+  test("state deduplicated on (conv_id, ts) feeding exceptAll: exec == union-window form") {
+    // dropDuplicates on a key subset becomes an aggregate that renews
+    // state_val's attribute id below the node; exceptAll's rewrite must
+    // still find the value column
+    val st = state.dropDuplicates("conv_id", "ts")
+    val native = AsOfMerge.join(turns, st, "conv_id", "ts", Seq("state_val"))
+    val reference = AsOf.join(turns, st, "conv_id", "ts", Seq("state_val"))
+    assert(native.exceptAll(reference).isEmpty && reference.exceptAll(native).isEmpty)
+    assert(native.exceptAll(native).isEmpty)
+  }
+
   test("null keys/timestamps: exec matches the union-window form exactly") {
     import spark.implicits._
     // null key = its own group (Window.partitionBy groups NULLs); null ts

@@ -1,6 +1,7 @@
 package graft
 
-import graft.ops.{AsOf, Sessionize}
+import graft.ops.AsOf
+import graft.plans.TurnScan
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Properties, Test}
 
@@ -87,7 +88,7 @@ object AsOfProperties extends Properties("asof") {
       }
     }
 
-  property("blocked boundary-carry sessionize ≡ single-window sessionize, any block size") =
+  property("blocked boundary-carry sessionize ≡ turn scan, any block size") =
     Prop.forAll(
       Gen.listOfN(20, Gen.choose(1L, 200L)),
       Gen.choose(1, 25)) { (gaps, blockRows) =>
@@ -95,7 +96,7 @@ object AsOfProperties extends Properties("asof") {
       val tss = gaps.scanLeft(0L)(_ + _)
       val turns = tss.zipWithIndex.map { case (t, i) => ("c", i, ts(t)) }
         .toDF("conv_id", "turn_idx", "ts")
-      val direct = Sessionize.byGap(turns, 100)
+      val direct = TurnScan.sessions(turns, 100)
         .orderBy("turn_idx").select("session_id").as[Int].collect().toSeq
       val blocked = graft.ops.BlockedScan.sessionizeByGap(turns, 100, blockRows)
         .orderBy("turn_idx").select("session_id").as[Int].collect().toSeq
@@ -108,7 +109,7 @@ object AsOfProperties extends Properties("asof") {
       val tss = gaps.scanLeft(0L)(_ + _)
       val turns = tss.zipWithIndex.map { case (t, i) => ("c", i, ts(t)) }
         .toDF("conv_id", "turn_idx", "ts")
-      val got = Sessionize.byGap(turns, 100)
+      val got = TurnScan.sessions(turns, 100)
         .orderBy("turn_idx").select("session_id").as[Int].collect().toSeq
       val expected = gaps.scanLeft(0) { case (sid, g) => if (g > 100) sid + 1 else sid }
       got == expected

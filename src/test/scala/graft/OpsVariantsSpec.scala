@@ -144,21 +144,23 @@ class OpsVariantsSpec extends SparkSpec {
     assert(brute.size >= 6, s"planted pairs missing: ${brute.size}")
   }
 
-  test("tie-merge fuses consecutive flagged rows: first value, summed duration") {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("conv_id")).orderBy(col("turn_idx"))
+  test("tie-merge fuses each role run by run_id: first value, summed duration") {
     val t = Seq(
       ("a", 0, "user", 10L), ("a", 1, "user", 5L), // fuse
       ("a", 2, "assistant", 7L),
       ("a", 3, "user", 2L), ("a", 4, "user", 1L), ("a", 5, "user", 4L) // fuse x3
     ).toDF("conv_id", "turn_idx", "role", "dur")
-      .withColumn("__start",
-        lag(col("role"), 1).over(w).isNull || lag(col("role"), 1).over(w) =!= col("role"))
-    val got = TieMerge.fuse(t, col("__start"), "role", "dur")
-      .orderBy("fuse_id")
-      .select("fuse_id", "role", "dur", "n_fused")
+    val got = graft.plans.TurnScan.runs(t.repartition(3))
+      .groupBy(col("conv_id"), col("run_id"))
+      .agg(min_by(col("role"), col("turn_idx")).as("role"), sum(col("dur")).as("dur"),
+        count(lit(1)).as("n_fused"))
+      .orderBy("run_id")
+      .select("run_id", "role", "dur", "n_fused")
       .as[(Int, String, Long, Long)].collect().toSeq
     assert(got == Seq((0, "user", 15L, 2L), (1, "assistant", 7L, 1L), (2, "user", 7L, 3L)))
+    // the run ids are the Window reference's, row for row
+    val ids = graft.plans.TurnScan.runs(t).select("turn_idx", "run_id")
+    assert(ids.exceptAll(ReferenceModules.runIds(t).select("turn_idx", "run_id")).isEmpty)
   }
 
   test("stateful scan (tool episodes): silence reset + order invariance under repartitioning") {
@@ -182,9 +184,9 @@ class OpsVariantsSpec extends SparkSpec {
     }
   }
 
-  test("blocked boundary-carry sessionize equals single-window form on skewed data") {
+  test("blocked boundary-carry sessionize equals the turn-scan form on skewed data") {
     val turns = graft.datagen.TranscriptGen.turns(spark, 30, skewEvery = 29)
-    val direct = Sessionize.byGap(turns, 3600)
+    val direct = graft.plans.TurnScan.sessions(turns, 3600)
       .select("conv_id", "turn_idx", "session_id")
       .orderBy("conv_id", "turn_idx").collect().toSeq
     Seq(7, 64, 100000).foreach { blockRows =>

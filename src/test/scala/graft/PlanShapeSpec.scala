@@ -129,6 +129,15 @@ class PlanShapeSpec extends SparkSpec {
     val p = plan("q_sessionize")
     assert(aggs(p) == 0)
     assert(exchanges(p) <= 3)
+    // every per-conversation lag, session and run key walks its turns once,
+    // in the native scan: exactly 1 TurnScan, and no Window beyond the one
+    // `Tables.turns` uses to number the turns
+    for (k <- Seq("q_lag_features", "q_sessionize", "q_session_stats", "q_runlength_roles",
+        "q_tie_merge", "q_gap_quantiles", "q_gap_quantiles_approx", "q_mean_nonzero",
+        "q_bucket_battery")) {
+      val q = plan(k)
+      assert(nodes(q, "TurnScan") == 1 && nodes(q, "Window") == 1, s"$k:\n$q")
+    }
   }
 
   test("native as-of exec: present in plan, no aggregation, bounded exchanges") {
@@ -152,7 +161,7 @@ class PlanShapeSpec extends SparkSpec {
       lit("xxxx").as("text"),
       timestamp_micros(lit(1704067200000000L) + col("id") * 1000000L).as("ts"))
     val laid = graft.ops.Ordered.orderedPartitions(t, "conv_id", "turn_idx")
-    val p = graft.ops.LagLead.turnLagFeatures(laid)
+    val p = graft.plans.TurnScan.lag(laid)
       .queryExecution.executedPlan.toString
     assert(count(p, "Exchange rangepartitioning") == 1, s"range layout missing in:\n$p")
     assert(count(p, "Exchange hashpartitioning") == 0, s"window re-shuffled the laid frame:\n$p")

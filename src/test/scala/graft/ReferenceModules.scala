@@ -5,15 +5,16 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.features._
 import graft.functions.Stats
-import graft.ops.{LagLead, Sessionize}
+import graft.ops.LagLead
 
 /** The Window formulation of the lag, session, run-length and
-  * trimmed-mean modules — the reference [[FeatureMatrixSpec]] and
-  * [[TurnScanSpec]] hold the native turn scan and the single-sort modules
-  * to, row for row. Lag columns come from lag/lead windows, sessions from
-  * the cumulative [[Sessionize.byGap]] id, run boundaries from their own
-  * lag/lead(role), and trim ranks from a `row_number over (text_len,
-  * turn_idx)` window with n = `count over conv_id`.
+  * trimmed-mean modules — the reference [[FeatureMatrixSpec]],
+  * [[TurnScanSpec]] and the blocked-scan specs hold the native turn scan
+  * and the single-sort modules to, row for row. Lag columns come from
+  * lag/lead windows, sessions from the cumulative [[sessionIds]] id, runs
+  * from their own lag/lead(role) and the cumulative [[runIds]] id, and trim
+  * ranks from a `row_number over (text_len, turn_idx)` window with n =
+  * `count over conv_id`.
   */
 object ReferenceModules {
 
@@ -31,6 +32,33 @@ object ReferenceModules {
       .withColumn("prev_text_len", lag(len, 1).over(w))
   }
 
+  /** `session_id`: a running count of the turns whose gap to the previous
+    * turn exceeds `gapSeconds` (a NULL gap counts 0) — the DuckDB oracle's
+    * spelling of `q_sessionize`.
+    */
+  def sessionIds(turns: DataFrame, gapSeconds: Long): DataFrame = {
+    val w = Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))
+    val newSess = when(
+      LagLead.micros(col("ts")) - LagLead.micros(lag(col("ts"), 1).over(w)) > gapSeconds * 1000000L, 1
+    ).otherwise(0)
+    turns.withColumn("session_id",
+      sum(newSess).over(w.rowsBetween(Window.unboundedPreceding, 0)).cast("int"))
+  }
+
+  /** `run_id`: a running count of the turns whose role differs from the
+    * previous one (or follows a NULL role), minus one; a NULL role after a
+    * non-NULL one counts 0 — the oracle's spelling of `q_runlength_roles`
+    * and `q_tie_merge`.
+    */
+  def runIds(turns: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))
+    val changed = when(
+      lag(col("role"), 1).over(w).isNull || lag(col("role"), 1).over(w) =!= col("role"), 1
+    ).otherwise(0)
+    turns.withColumn("run_id",
+      (sum(changed).over(w.rowsBetween(Window.unboundedPreceding, 0)) - 1).cast("int"))
+  }
+
   object Lag extends FeatureModule {
     val name = "lag"
     override val deps: Seq[String] = LagModule.deps
@@ -44,7 +72,7 @@ object ReferenceModules {
     override def enrich(turns: DataFrame): DataFrame = {
       val w = Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))
       val wCum = w.rowsBetween(Window.unboundedPreceding, 0)
-      Sessionize.byGap(turns, gapSeconds)
+      sessionIds(turns, gapSeconds)
         .withColumn("__rn", row_number().over(w))
         .withColumn("sess_start",
           lag(col("session_id"), 1).over(w).isNull ||
@@ -111,7 +139,7 @@ object ReferenceModules {
     override def enrich(turns: DataFrame): DataFrame = {
       val w = Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))
       val wCum = w.rowsBetween(Window.unboundedPreceding, 0)
-      turns
+      runIds(turns)
         .withColumn("run_start",
           lag(col("role"), 1).over(w).isNull ||
             lag(col("role"), 1).over(w) =!= col("role"))

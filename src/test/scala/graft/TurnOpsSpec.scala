@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops._
+import graft.plans.TurnScan
 import org.apache.spark.sql.functions._
 
 class TurnOpsSpec extends SparkSpec {
@@ -14,7 +15,7 @@ class TurnOpsSpec extends SparkSpec {
       ("a", 3, ts("2024-01-01 00:02:31")),   // exactly 60s: NOT a new session (strict >)
       ("b", 0, ts("2024-01-01 00:00:00"))
     ).toDF("conv_id", "turn_idx", "ts")
-    val got = Sessionize.byGap(t, 60).select("conv_id", "turn_idx", "session_id")
+    val got = TurnScan.sessions(t, 60).select("conv_id", "turn_idx", "session_id")
       .as[(String, Int, Int)].collect().toMap2
     assert(got(("a", 0)) == 0 && got(("a", 1)) == 0)
     assert(got(("a", 2)) == 1)
@@ -38,7 +39,7 @@ class TurnOpsSpec extends SparkSpec {
   test("run length: runs of equal values segment correctly") {
     val t = Seq(("a", 0, "u"), ("a", 1, "u"), ("a", 2, "v"), ("a", 3, "u"))
       .toDF("conv_id", "turn_idx", "role")
-    val stats = RunLength.runStats(t, "role").collect().head
+    val stats = RunLength.runStats(t).collect().head
     assert(stats.getAs[Long]("n_runs") == 3)
     assert(stats.getAs[Long]("run_len_max") == 2)
   }
@@ -74,7 +75,7 @@ class TurnOpsSpec extends SparkSpec {
       ("a", 0, "user", "hi", ts("2024-01-01 00:00:00.000001")),
       ("a", 1, "assistant", "hello!", ts("2024-01-01 00:00:01.500001"))
     ).toDF("conv_id", "turn_idx", "role", "text", "ts")
-    val rows = LagLead.turnLagFeatures(t).orderBy("turn_idx").collect()
+    val rows = TurnScan.lag(t).orderBy("turn_idx").collect()
     assert(rows(0).isNullAt(rows(0).fieldIndex("prev_role")))
     assert(rows(1).getAs[String]("prev_role") == "user")
     assert(rows(1).getAs[Long]("delta_ts_us") == 1500000L)

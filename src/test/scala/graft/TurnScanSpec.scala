@@ -5,9 +5,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The native turn scan equals the Window reference ([[ReferenceModules]])
-  * row for row, on every NULL placement the Window spelling gives meaning
-  * to. The feature matrix checksum cannot catch a kernel bug on its own:
-  * its reference path runs the same kernel.
+  * row for row — every lag, session and run column and both ids — on every
+  * NULL placement the Window spelling gives meaning to. The feature matrix
+  * checksum cannot catch a kernel bug on its own: its reference path runs
+  * the same kernel.
   */
 class TurnScanSpec extends SparkSpec {
   import spark.implicits._
@@ -72,6 +73,12 @@ class TurnScanSpec extends SparkSpec {
     val gaps = ref.filter(col("conv_id") === "gaps").orderBy("turn_idx")
       .select("sess_start").as[Boolean].collect().toSeq
     assert(gaps.take(3) == Seq(true, false, true), s"gap G is no break, G + 1 µs is: $gaps")
+    // the ids count past NULL starts: a NULL role after a non-NULL one
+    // stays in the run before it, and a NULL gap opens no session
+    val roles = ref.filter(col("conv_id") === "roles").orderBy("turn_idx")
+      .select("run_id", "session_id").as[(Int, Int)].collect().toSeq
+    assert(roles.map(_._1) == Seq(0, 1, 1, 1, 2, 3, 3, 3, 4, 5, 5), roles)
+    assert(roles.map(_._2).forall(_ == 0), roles)
     for (gap <- Seq(G, 300L); parts <- Seq(1, 7)) {
       val in = turns.repartition(parts)
       assertSame(kernel(in, gap), reference(in, gap), s"gap=$gap partitions=$parts")
@@ -85,6 +92,22 @@ class TurnScanSpec extends SparkSpec {
       val in = keyed.repartition(parts)
       assertSame(kernel(in, G), reference(in, G), s"struct key, partitions=$parts")
     }
+  }
+
+  test("self-join: a turn-scan frame joins itself on (conv_id, turn_idx)") {
+    val x = graft.plans.TurnScan.sessions(turns, G)
+    val j = x.as("a").join(x.as("b"), Seq("conv_id", "turn_idx"))
+      .select(col("a.session_id").as("sa"), col("b.session_id").as("sb"),
+        col("a.sess_len").as("la"), col("b.sess_len").as("lb"))
+    // the NULL conv_id group has no equi-join partner
+    assert(j.count() == turns.filter(col("conv_id").isNotNull).count())
+    assert(j.filter(col("sa") =!= col("sb") || !col("la").eqNullSafe(col("lb"))).isEmpty)
+  }
+
+  test("exceptAll: a turn-scan frame minus itself is empty") {
+    val y = graft.plans.TurnScan.lag(turns)
+    assert(y.exceptAll(y).isEmpty)
+    assert(y.union(y).exceptAll(y).count() == turns.count())
   }
 
   test("the module chain plans one turn scan; session_gap_seconds reaches it") {
